@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipeline.RetailRocket
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end comparison against BASELINE.md: generates a
@@ -21,14 +20,7 @@ object BaselineBench {
     // optional third arg: recency cap on prefix events (scale guard;
     // absent = reference-exact)
     val maxPrefix = args.drop(2).headOption.map(_.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSpark(32)
 
     def t[A](name: String)(f: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -154,7 +146,7 @@ object BaselineBench {
     // Row-group-bounded save (VERDICT r14 item 8): the feature matrix
     // is an engine-DERIVED table read back by training jobs — 8 MB row
     // groups make file splits real for downstream scan-rate consumers
-    // (ProbeRowGroups: kernel-stage walls halve on group-granular
+    // (`Probe row-groups`: kernel-stage walls halve on group-granular
     // fixtures), where the reference's single default-block output
     // reads back single-task per file.
     val (_, saveS) = t("parquet save") {

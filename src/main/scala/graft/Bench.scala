@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import java.nio.file.{Files, Paths}
+
+import graft.core.{Caches, LocalSpark, StageMetrics}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. local[32] + 32 shuffle
@@ -144,51 +148,19 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark(LocalSpark.cores(32))
     val work = SparkEntry.queries.toSeq.sortBy(_._1)
-    // Fingerprint PRE-PASS, identical to Verify's: sequential,
-    // alphabetical, fresh scope, constructionMode (no eager jobs).
-    // Fingerprints were previously stamped in-loop after each query's
-    // execution, where the accumulated+materialized cache state of all
-    // earlier queries leaks into the stamp — a basis that can diverge
-    // from Verify's construction-time pre-pass (it did, 293/314, under
-    // shared base frames). One construction-only basis in FpAll, Verify
-    // AND Bench keeps the Verify↔Bench fingerprint linkage — the
-    // invariant that separates host contention from plan regressions —
-    // exact by construction. Runs before the timed loop; the timed
-    // methodology (toRdd.count() full-plan basis) is unchanged.
-    val fpPre: Map[String, String] = graft.core.Caches.constructionMode {
-      graft.core.Caches.withScope {
-        work.map { case (name, fn) =>
-          val dfOpt = try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
-          // debugging aid: dump each normalized plan text when asked, so
-          // a cross-run fingerprint drift can be diffed to its substring
-          sys.env.get("SPARK_GRAFT_FP_DIR").foreach { dir =>
-            dfOpt.foreach { df =>
-              try {
-                java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-                java.nio.file.Files.write(
-                  java.nio.file.Paths.get(dir, s"$name.txt"),
-                  normalizedPlan(df).getBytes("UTF-8"))
-              } catch { case _: Throwable => () }
-            }
-          }
-          (name,
-            dfOpt
-              .flatMap(df => try Some(planFingerprint(df)) catch { case _: Throwable => None })
-              .getOrElse("-"))
-        }.toMap
-      }
-    }
+    // Pre-pass before the timed loop; the timed methodology (toRdd.count()
+    // full-plan basis) is unchanged. SPARK_GRAFT_FP_DIR dumps each
+    // normalized plan text, so a cross-run drift can be diffed to its
+    // substring.
+    val fpPre: Map[String, String] = fingerprints(spark, sfDir, work, (name, df) =>
+      sys.env.get("SPARK_GRAFT_FP_DIR").foreach { dir =>
+        try {
+          Files.createDirectories(Paths.get(dir))
+          Files.write(Paths.get(dir, s"$name.txt"), normalizedPlan(df).getBytes("UTF-8"))
+        } catch { case _: Throwable => () }
+      }).toMap
     // Warm-up outside the timed loop: JIT + codegen + filesystem init
     // otherwise land entirely on the alphabetically-first query touching
     // each table/code path. Touch every input table and the hot
@@ -210,43 +182,24 @@ object Bench {
           org.apache.spark.sql.functions.lit(16L)))
           .orderBy(org.apache.spark.sql.functions.col("id"))).as("rn"))
       .selectExpr("max(rn)").collect()
-    // Shuffle observability: accumulate shuffle-write bytes per stage
-    // and attribute the delta to each query (listener bus drained
-    // before reading) — a plan regression shows up as megabytes moved
-    // even when wall-clock noise hides it.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    // Skew observability (VERDICT r12 item 5): fingerprints catch plan
-    // CHANGES but not skew inside an unchanged plan (q114's "3 active
-    // partitions" was invisible in the artifact). Track the longest
-    // single task per query: a healthy 32-way query has max_task ≪ wall;
-    // a one-hot-partition query has max_task ≈ wall.
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val ti = te.taskInfo
-        // TaskInfo.duration throws on unfinished tasks (killed/failed)
-        val d = if (ti != null && ti.finished) ti.duration else 0L
-        var cur = maxTaskMs.get()
-        while (d > cur && !maxTaskMs.compareAndSet(cur, d)) cur = maxTaskMs.get()
-      }
-    })
+    // Shuffle observability: shuffle-write bytes of the stages completed
+    // during each query (listener bus drained before reading) — a plan
+    // regression shows up as megabytes moved even when wall-clock noise
+    // hides it. Skew observability (VERDICT r12 item 5): fingerprints
+    // catch plan CHANGES but not skew inside an unchanged plan, so the
+    // longest single task is kept too: a healthy 32-way query has
+    // max_task ≪ wall; a one-hot-partition query has max_task ≈ wall.
+    val metrics = StageMetrics.on(spark)
     // One cache scope around the whole loop: cross-query plan dedup
     // (e.g. q26 reusing q23's cached candidate set — the pipeline's own
     // candidates-feed-features structure) is an intentional design
     // feature, and every operator-internal cache is dropped at the end
     // of the run rather than pinned for the session's lifetime.
-    val results = graft.core.Caches.withScope {
+    val results = Caches.withScope {
       work.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        val b0 = {
-          org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
-          maxTaskMs.set(0L) // queries run sequentially; bus drained
-          shuffleBytes.get
-        }
+        metrics.drain()
+        metrics.reset() // queries run sequentially; bus drained
         // Force FULL-plan evaluation: `df.count()` wraps the query in a
         // count aggregate and lets the optimizer PRUNE the parts the
         // count doesn't need — a left-outer join's right side and every
@@ -260,10 +213,8 @@ object Bench {
         // a throwing query must NOT report a normal-looking (fast!)
         // time — surface it as -1 so regressions can't hide
         val t = if (dfOpt.isDefined) (System.nanoTime() - t0) / 1e9 else -1.0
-        val (mb, maxTaskS) = {
-          org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
-          ((shuffleBytes.get - b0) / 1e6, maxTaskMs.get / 1e3)
-        }
+        metrics.drain()
+        val (mb, maxTaskS) = (metrics.shuffleWriteBytes / 1e6, metrics.maxTaskMs / 1e3)
         // fingerprint from the pre-pass (construction basis, stamped
         // above); "-" when the query failed HERE even if construction
         // succeeded, so a failure is never paired with a healthy stamp
@@ -345,7 +296,7 @@ object Bench {
     // once at end-of-bench — warm JVM, warm page cache — and emit the
     // MIN of the two readings; a real plan regression reproduces, a
     // host stall does not.
-    val min2 = graft.core.Caches.withScope {
+    val min2 = Caches.withScope {
       ok.sortBy(-_._2).take(10).map { case (name, first, _, _, _) =>
         val t0 = System.nanoTime()
         val t =
@@ -377,4 +328,34 @@ object Bench {
         f""""shuffle_mb_total":$totalSh%.1f,"sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** The one fingerprint basis: every query in `work` is constructed,
+    * never executed, sequentially and alphabetically in one fresh cache
+    * scope under `Caches.constructionMode` (eager operators degrade to
+    * lazy caches, so no Spark job runs and the stamp is a pure function
+    * of code and data). Stamping after execution, or inside a concurrent
+    * pool, lets earlier queries' cache state leak into the plan; one
+    * construction-only pass shared by Bench, Verify and FpAll keeps their
+    * fingerprints comparable by construction. A query whose construction
+    * or stamp throws gets `-` and one `[fp]` line on stderr. `inspect`
+    * sees each constructed frame (plan-text dumps).
+    */
+  def fingerprints(
+      spark: SparkSession,
+      dir: String,
+      work: Seq[(String, (SparkSession, String) => DataFrame)],
+      inspect: (String, DataFrame) => Unit = (_, _) => ()): Seq[(String, String)] =
+    Caches.constructionMode {
+      Caches.withScope {
+        work.sortBy(_._1).map { case (name, fn) =>
+          val fp =
+            try { val df = fn(spark, dir); inspect(name, df); planFingerprint(df) }
+            catch { case e: Throwable =>
+              Console.err.println(s"[fp] $name fingerprint failed: ${e.getMessage}")
+              "-"
+            }
+          (name, fp)
+        }
+      }
+    }
 }

@@ -1,42 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
+import graft.core.LocalSpark
 
 /** Prints every contract query's plan fingerprint as one JSON line,
-  * WITHOUT executing the plans (plan construction only — eager
-  * checkpoint-based operators still materialize their own subtrees).
-  * Purpose: cheap before/after fingerprint diffs proving a targeted
-  * change touched only its target queries (VERDICT r12 item 4) —
-  * both sides of a diff must come from THIS main (bench fingerprints
-  * are computed post-execution with warmed caches; same function,
-  * but cache state can differ, so never mix the two bases in a diff).
+  * WITHOUT executing the plans: the [[Bench.fingerprints]] pre-pass,
+  * the same basis Verify and Bench stamp on. Purpose: cheap
+  * before/after fingerprint diffs proving a targeted change touched
+  * only its target queries (VERDICT r12 item 4).
   *
   * Usage: tools/probe.sh graft.FpAll [sfDir]
   */
 object FpAll {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // constructionMode: eager operators degrade to lazy caches — the
-    // dump is truly plan-construction-only (no Spark jobs), and the
-    // basis matches the Verify/Bench fingerprint pre-passes exactly.
-    val fps = graft.core.Caches.constructionMode {
-      graft.core.Caches.withScope {
-        SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-          val fp =
-            try Bench.planFingerprint(fn(spark, sfDir))
-            catch { case _: Throwable => "-" }
-          (name, fp)
-        }
-      }
-    }
+    val spark = LocalSpark(LocalSpark.cores(32))
+    val fps = Bench.fingerprints(spark, sfDir, SparkEntry.queries.toSeq)
     println(fps.map { case (k, fp) => s"\"$k\":\"$fp\"" }
       .mkString("""{"metric":"fp_all","queries":{""", ",", "}}"))
     spark.stop()

@@ -1,18 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local replica of the driver's t1 smoke: run SparkEntry.entry on
   * sf0.001 and print schema + row count (must be > 0).
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.LocalSpark(8)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"[smoke] entry() -> $n rows, ${df.columns.length} cols")

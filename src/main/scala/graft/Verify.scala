@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import graft.core.LocalSpark
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,45 +14,17 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark(LocalSpark.cores(4))
     new java.io.File(outDir).mkdirs()
     val work0 = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .toSeq.sortBy(_._1)
-    // Fingerprint PRE-PASS, sequential and BEFORE the harness cache pin:
-    // stamps were previously taken inside the execution pool, where
-    // cross-query cache state depends on thread timing — q117/q139/q163
-    // drifted run-to-run with zero plan change (r16). Constructing every
-    // query alphabetically in a fresh scope with no pin is exactly
-    // FpAll's basis, so the attestation fingerprints are deterministic
-    // AND directly comparable to FpAll output. Costs one extra plan
-    // construction (plus the few eager operators' bounded driver jobs).
     val t0 = System.nanoTime()
     def phase(name: String): Unit =
       System.err.println(f"[verify] phase $name at ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    // constructionMode: eager operators degrade to lazy caches, so the
-    // pre-pass runs no Spark jobs at construction (ADVICE r16) and the
-    // stamp is a pure function of code+data — same basis as FpAll and
-    // Bench's pre-pass.
-    val fpPre: Map[String, String] = graft.core.Caches.constructionMode {
-      graft.core.Caches.withScope {
-        work0.map { case (name, fn) =>
-          (name,
-            try Bench.planFingerprint(fn(spark, sfDir))
-            catch { case e: Throwable =>
-              System.err.println(s"[verify] $name fingerprint failed: ${e.getMessage}")
-              "-"
-            })
-        }.toMap
-      }
-    }
+    // Fingerprint pre-pass BEFORE the harness cache pin and the pool:
+    // stamps taken inside the pool drifted with thread timing (r16).
+    val fpPre = Bench.fingerprints(spark, sfDir, work0).toMap
     phase("fingerprint pre-pass done")
     // Harness-owned pin: the sessionize+enrich subtree feeds ~15
     // queries; cached OUTSIDE the scopes so per-query unpersists leave

@@ -615,9 +615,11 @@ object Graph {
     * Identical triangle set and per-vertex counts as the id-oriented
     * plan (orientation is internal; each triangle has exactly one
     * (deg,id)-minimal apex) — same oracle. Costs one extra
-    * degree-attach join per side; ProbeTriangles measures when that
+    * degree-attach join per side; ProbeTriangles measured when that
     * premium pays (hub regime) and when it doesn't (flat-degree covis
-    * at test SFs, where [[triangleCounts]] stays the default).
+    * at test SFs, where [[triangleCounts]] stays the default) — DESIGN.md
+    * "Asymmetric dedup & graph metrics",
+    * `git show 519ff36:src/main/scala/graft/ProbeTriangles.scala`.
     */
   def triangleCountsDegreeOriented(
       edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
@@ -678,7 +680,9 @@ object Graph {
     * degree-1 vertex ties its own label against its neighbor's and the
     * min wins for BOTH endpoints, so sparse components converge
     * instead of oscillating — measured on the real covis graphs
-    * (ProbeLpa): Q −0.037 → +0.926 at sf0.01, unchanged at sf0.1
+    * (ProbeLpa — DESIGN.md "Round-9 continuation block", q287 finding;
+    * `git show 519ff36:src/main/scala/graft/ProbeLpa.scala`):
+    * Q −0.037 → +0.926 at sf0.01, unchanged at sf0.1
     * (whose 100-node/1212-edge quasi-clique genuinely is one
     * community; a semi-async md5-parity schedule was also measured
     * and wins nothing over the self-vote while costing 2× the steps).

@@ -20,7 +20,9 @@ object Sampling {
     * conv(substring(md5(...))) chain — first-8-hex == top 32 of the
     * 60-bit md5 prefix, so `md5Prefix60 >> 28` is bit-identical and
     * skips the per-row hex round trip (~75% of the chain's cost,
-    * ProbeLevelSample); the SQL twins keep the conv form.
+    * ProbeLevelSample — DESIGN.md "Md5Prefix60",
+    * `git show 519ff36:src/main/scala/graft/ProbeLevelSample.scala`);
+    * the SQL twins keep the conv form.
     */
   def hashBucketPermille(key: Column): Column =
     shiftright(

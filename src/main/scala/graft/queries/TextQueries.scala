@@ -75,8 +75,10 @@ object TextQueries {
     val emb = Tables.embeddings(s, d)
     // 8 tables × 3 planes + 2 Hamming-1 probe bits: recall@5 0.997
     // measured vs brute force on the sf0.001 fixture (0.884 without
-    // probes, 0.41 at 4×4 — ProbeLsh sweep; probing beats adding
-    // tables at the same index size). SimilaritySpec pins the floors.
+    // probes, 0.41 at 4×4 — ProbeLsh sweep, DESIGN.md "Observability &
+    // measured index quality", `git show 519ff36:src/main/scala/graft/ProbeLsh.scala`;
+    // probing beats adding tables at the same index size).
+    // SimilaritySpec pins the floors.
     Similarity
       .lshBucketedTopK(
         emb.filter(col("vec_id") < 64), emb, "vec_id", "embedding",
@@ -127,7 +129,9 @@ object TextQueries {
     * each 64-dim vector to 16 codes (~10 bytes vs 256 — the index that
     * still fits in memory at corpus sizes where full vectors don't);
     * ADC scans the codes, exact cosine reranks the top 32. recall@5
-    * 0.93 measured vs brute force (ProbePq sweep; 8×16 was 0.53).
+    * 0.93 measured vs brute force (ProbePq sweep; 8×16 was 0.53 —
+    * DESIGN.md "Observability & measured index quality",
+    * `git show 519ff36:src/main/scala/graft/ProbePq.scala`).
     * Deterministic (md5 seeds + exact-integer Lloyd + integer ADC
     * gather) ⇒ oracle-checkable like q41.
     */
@@ -143,9 +147,9 @@ object TextQueries {
   /** IVFPQ ANN (q160): IVF cell pruning (16 cells, 6 probes, 3-cell
     * spill lists) over a PQ code scan (16×32, ~10-byte codes + exact
     * norm — no vectors in the scanned index), exact-cosine rerank of
-    * the top 32. recall@5 0.88 measured (ProbePq). The layout that
-    * holds at 100 TB: the scan is probe-cell-bounded AND reads codes
-    * only.
+    * the top 32. recall@5 0.88 measured (ProbePq, cited above). The
+    * layout that holds at 100 TB: the scan is probe-cell-bounded AND
+    * reads codes only.
     */
   def knnIvfPq(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)

@@ -148,7 +148,8 @@ class SimilaritySpec extends SparkSpec {
     }
     // the q36/q41 production configs: 8 tables × 3 planes measured
     // 0.884, 16-cell/6-probe/2-assign IVF measured 0.884 (round-6
-    // ProbeRecall sweep; 4×4 LSH was 0.41, 8/2/1 IVF 0.50)
+    // recall sweep; 4×4 LSH was 0.41, 8/2/1 IVF 0.50 — DESIGN.md
+    // "Observability & measured index quality")
     val lsh = recallOf(topSets(
       Similarity.lshBucketedTopK(queries, emb, "vec_id", "embedding",
         k = 5, planes = 3, dim = 64, tables = 8)))
@@ -161,7 +162,9 @@ class SimilaritySpec extends SparkSpec {
     assert(lsh >= 0.70, f"LSH recall collapsed: $lsh%.3f")
     assert(ivf >= 0.70, f"IVF recall collapsed: $ivf%.3f")
     // q36's production config adds 2 Hamming-1 probe bits per table:
-    // measured 0.997 (ProbeLsh sweep); floor well above the no-probe
+    // measured 0.997 (ProbeLsh sweep, DESIGN.md "Observability & measured
+    // index quality", `git show 519ff36:src/main/scala/graft/ProbeLsh.scala`);
+    // floor well above the no-probe
     // 0.884 so a probing regression cannot hide
     val lshMp = recallOf(topSets(
       Similarity.lshBucketedTopK(queries, emb, "vec_id", "embedding",
@@ -192,8 +195,10 @@ class SimilaritySpec extends SparkSpec {
       .select(col("query_id"), col("neighbor_id"))
       .as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    // the q155 production config: 16×32 measured 0.928 (ProbePq sweep;
-    // 8×16 was 0.53 — too coarse for cosine on this corpus)
+    // the q155 production config: 16×32 measured 0.928 (ProbePq sweep,
+    // DESIGN.md "Observability & measured index quality",
+    // `git show 519ff36:src/main/scala/graft/ProbePq.scala`; 8×16 was 0.53 — too coarse
+    // for cosine on this corpus)
     val (exact, pq, pq2) = graft.core.Caches.withScope {
       val e = topSets(Similarity.bruteForceTopK(queries, emb, "vec_id", "embedding", 5))
       val p = topSets(Similarity.pqTopK(queries, emb, "vec_id", "embedding",

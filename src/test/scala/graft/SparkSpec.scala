@@ -4,16 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM, `Test / fork`).
-  * Mirrors driver config: UTC, small shuffle parallelism, AQE on.
+  * The tool session config at small shuffle parallelism.
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.LocalSpark(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

@@ -3,7 +3,8 @@
 # with Spark's standard JPMS --add-opens flags (sbt adds these when
 # forking; bare java without them breaks Kryo → MLlib Word2Vec etc).
 # Usage: tools/probe.sh <mainClass> [args...]
-#   e.g. tools/probe.sh graft.QTime q19_covis_pairs /root/testdata/sf0.1
+#   e.g. tools/probe.sh graft.Inspect q19_covis_pairs time
+#        tools/probe.sh graft.Probe scale-docs 100   (no mode: list the modes)
 # Expects /tmp/graft-classes (cp -r target/scala-2.13/classes /tmp/graft-classes).
 exec java -XX:+IgnoreUnrecognizedVMOptions \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
