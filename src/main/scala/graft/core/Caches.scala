@@ -160,7 +160,9 @@ object Caches {
     * latch (returning unfilled would reintroduce the broadcast race).
     * A failed fill releases the latch with `filled` still false, so
     * waiters proceed on the lazy entry (the pre-fix behavior) and the
-    * next call retries.
+    * next call retries; each such waiter prints a `[caches]` line on
+    * stderr, so the degraded path never passes silently. A waiter
+    * interrupted in the wait keeps its interrupt flag and fails.
     */
   def materialized(df: DataFrame): DataFrame = {
     if (constructionOnly.get) return cache(df)
@@ -188,7 +190,16 @@ object Caches {
             Caches.synchronized { e.filling = null }
             latch.countDown()
           }
-        } else if (latch != null) latch.await()
+        } else if (latch != null) {
+          try latch.await()
+          catch {
+            case ie: InterruptedException =>
+              Thread.currentThread().interrupt()
+              throw new IllegalStateException("interrupted while waiting for a cache fill", ie)
+          }
+          if (!e.filled)
+            System.err.println("[caches] fill failed, waiter proceeds on lazy entry")
+        }
     }
     out
   }

@@ -56,6 +56,12 @@ object Embeddings {
   /** [[trainWord2Vec]], but an empty/under-minCount corpus yields an
     * empty vectors table instead of MLlib's IllegalArgumentException —
     * downstream attach then zero-fills every dim (out-of-vocab path).
+    *
+    * The vocabulary check and the fit both read `sequences`, whose plan
+    * typically ends in a per-session exchange: the corpus is cached for
+    * the two reads, so that subtree runs once. Neither returned table
+    * reads the corpus (the fitted vectors are a local relation), so the
+    * scope drops the cache on return.
     */
   def trainWord2VecOrEmpty(
       sequences: DataFrame,
@@ -63,14 +69,15 @@ object Embeddings {
       windowSize: Int = 5,
       minCount: Int = 3,
       maxIter: Int = 10,
-      seed: Long = 42L): DataFrame = {
+      seed: Long = 42L): DataFrame = graft.core.Caches.withScope {
     val spark = sequences.sparkSession
-    val hasVocab = sequences
+    val corpus = graft.core.Caches.cache(sequences)
+    val hasVocab = corpus
       .select(explode(col("seq")).as("w"))
       .groupBy(col("w")).count()
       .filter(col("count") >= minCount)
       .limit(1).count() > 0
-    if (hasVocab) trainWord2Vec(sequences, vectorSize, windowSize, minCount, maxIter, seed)
+    if (hasVocab) trainWord2Vec(corpus, vectorSize, windowSize, minCount, maxIter, seed)
     else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

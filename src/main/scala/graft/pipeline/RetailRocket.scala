@@ -257,13 +257,17 @@ object RetailRocket {
       trainCutoff: String,
       covisSessionCap: Option[Int] = Some(1000),
       cache: Boolean = true): TrainMatrices = {
+    def c(df: DataFrame) = if (cache) graft.core.Caches.cache(df) else df
     val cutoff = lit(trainCutoff).cast("timestamp")
     val trainEvents = events.filter(col("ts") < cutoff)
+    // both covis matrices read the capped events; separately cached
+    // plans share no exchange, so cache their common input too or the
+    // count + semi-join runs once per matrix
     val trainEventsCapped = covisSessionCap match {
       case Some(cap) =>
         val keep = trainEvents.groupBy(col("session_id")).count()
           .filter(col("count") <= cap).select("session_id")
-        trainEvents.join(keep, Seq("session_id"), "left_semi")
+        c(trainEvents.join(keep, Seq("session_id"), "left_semi"))
       case None => trainEvents
     }
 
@@ -325,7 +329,6 @@ object RetailRocket {
         countDistinct(col("session_id")).as("total_sessions"),
         avg(col("session_duration")).as("avg_session_duration"))
 
-    def c(df: DataFrame) = if (cache) graft.core.Caches.cache(df) else df
     TrainMatrices(
       c(itemCovis), c(catCovis), c(catPopTop), c(userPastCats),
       c(catPop), c(userCatAff), c(userStats))
@@ -612,16 +615,27 @@ object RetailRocket {
       val result = buildAll(
         spark, readEventsCsv(spark, eventsCsv), readPropsCsv(spark, propsCsvs), covisSessionCap,
         maxPrefixEvents)
-      val train = graft.core.Caches.cache(result.train)
-      val valid = graft.core.Caches.cache(result.valid)
-      graft.core.Sinks.writeParquet(
-        train, s"$outDir/X_train_spark.parquet", maxRecordsPerFile = Some(50000L))
-      graft.core.Sinks.writeParquet(
-        valid, s"$outDir/X_valid_spark.parquet", maxRecordsPerFile = Some(50000L))
+      // The counts come from one aggregate over each written file set,
+      // not from actions on the result frames: every action renders its
+      // plan, and these plans expand every nested cached relation of the
+      // build, which costs the driver far more than the count's jobs
+      // (DESIGN.md, "The RetailRocket build computes its shared subtrees
+      // once"). Read back with the known schema, which also holds for a
+      // split with no rows.
+      def written(df: DataFrame, name: String): (Long, Long) = {
+        val path = s"$outDir/X_${name}_spark.parquet"
+        graft.core.Sinks.writeParquet(df, path, maxRecordsPerFile = Some(50000L))
+        val r = spark.read.schema(df.schema).parquet(path)
+          .agg(count(lit(1)), count(when(col("y") === 1, true)))
+          .head()
+        (r.getLong(0), r.getLong(1))
+      }
+      val (trainRows, trainPositive) = written(result.train, "train")
+      val (validRows, validPositive) = written(result.valid, "valid")
       Map(
-        "train_rows" -> train.count(),
-        "valid_rows" -> valid.count(),
-        "train_positive" -> train.filter(col("y") === 1).count(),
-        "valid_positive" -> valid.filter(col("y") === 1).count())
+        "train_rows" -> trainRows,
+        "valid_rows" -> validRows,
+        "train_positive" -> trainPositive,
+        "valid_positive" -> validPositive)
     }
 }

@@ -397,7 +397,7 @@ object CurationQueries {
     * it's line-rate and is the thing being audited. The contract query
     * keeps sampleMod=1 (exact, oracle-hashed); SampledAuditSpec pins
     * the estimator against the exact answer at test scale, and
-    * ProbeScaleDocs carries the bounded-shuffle evidence at 500k docs.
+    * `Probe scale-docs` carries the bounded-shuffle evidence at 500k docs.
     */
   def blockingQualityAudit(
       docs: DataFrame, sampleMod: Long, knownCount: Long = -1L): DataFrame = {

@@ -637,7 +637,7 @@ object EventQueries {
     // cached: shardedCumsum consumes its input TWICE (per-row windows +
     // shard totals), and this input is the expensive union over the
     // session intervals — uncached, the union+agg subtree ran once per
-    // reference (QJobs: three ~15 s 64-task stages for a 4 s wall).
+    // reference (`Inspect <q> jobs`: three ~15 s 64-task stages for a 4 s wall).
     // Support grain (distinct seconds), value-domain-bounded.
     val deltas = graft.core.Caches.cache(sessions
       .select(col("start_s").as("t"), lit(1L).as("d"))

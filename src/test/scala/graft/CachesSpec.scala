@@ -96,6 +96,46 @@ class CachesSpec extends SparkSpec {
     assert(cacheManager.isEmpty, "after BOTH scopes exit the entry is gone")
   }
 
+  test("materialized: a waiter on a failed fill proceeds on the lazy entry and says so") {
+    cacheManager.clearCache()
+    // the fill's tasks block until the waiter is parked, then fail
+    val failing = udf { (x: Int) =>
+      CachesSpec.fillStarted.countDown()
+      CachesSpec.releaseFill.await()
+      if (x >= 0) throw new RuntimeException("injected fill failure")
+      x
+    }
+    // a range, not a local Seq: the optimizer would run the UDF on the
+    // driver while building the cache entry
+    val df = spark.range(0L, 2L, 1L, 2).select(failing(col("id").cast("int")).as("y"))
+    @volatile var ownerError: Throwable = null
+    @volatile var waiterError: Throwable = null
+    val owner = new Thread(() =>
+      try Caches.withScope(Caches.materialized(df))
+      catch { case t: Throwable => ownerError = t })
+    val waiter = new Thread(() =>
+      try Caches.withScope(Caches.materialized(df))
+      catch { case t: Throwable => waiterError = t })
+    val err = new java.io.ByteArrayOutputStream()
+    val oldErr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try {
+      owner.start()
+      assert(CachesSpec.fillStarted.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      waiter.start()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (waiter.getState != Thread.State.WAITING && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(waiter.getState == Thread.State.WAITING, "the waiter never parked on the fill")
+      CachesSpec.releaseFill.countDown()
+      owner.join(60000); waiter.join(60000)
+    } finally System.setErr(oldErr)
+    assert(ownerError != null, "the owner's failed fill must surface to the owner")
+    assert(waiterError == null, s"the waiter must proceed, got $waiterError")
+    assert(err.toString.contains("[caches] fill failed, waiter proceeds on lazy entry"))
+    assert(cacheManager.isEmpty, "both scopes released the entry")
+  }
+
   test("scopes nest: inner caches drop at inner exit, outer survive") {
     cacheManager.clearCache()
     import spark.implicits._
@@ -111,4 +151,11 @@ class CachesSpec extends SparkSpec {
     }
     assert(cacheManager.isEmpty)
   }
+}
+
+object CachesSpec {
+  // reached from the fill's tasks through the object, not the closure:
+  // task closures are serialized, and latches are not
+  val fillStarted = new java.util.concurrent.CountDownLatch(1)
+  val releaseFill = new java.util.concurrent.CountDownLatch(1)
 }

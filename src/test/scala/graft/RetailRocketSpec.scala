@@ -17,21 +17,24 @@ class RetailRocketSpec extends SparkSpec {
   private val t0 = 1430560800L
   private val t1 = 1436054400L
 
-  private lazy val fixtureDir: String = {
+  // events.csv rows: user 1 = two-session run with an in-train ATC;
+  // user 2 = valid-window ATC; user 3 = exact-1800s boundary pair.
+  private val eventRows = Seq(
+    s"${t0 * 1000},1,view,101,",
+    s"${(t0 + 600) * 1000},1,addtocart,102,",
+    s"${(t0 + 600 + 1801) * 1000},1,view,103,", // new session (gap 1801)
+    s"${t1 * 1000},2,view,101,",
+    s"${(t1 + 100) * 1000},2,addtocart,101,",
+    s"${t0 * 1000},3,view,101,",
+    s"${(t0 + 1800) * 1000},3,view,102,") // gap == 1800: SAME session
+
+  private lazy val fixtureDir: String = writeFixture(eventRows)
+
+  private def writeFixture(events: Seq[String]): String = {
     val dir = Files.createTempDirectory("rr-fixture")
     def write(name: String, lines: Seq[String]): Unit =
       Files.write(dir.resolve(name), (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    // events.csv: user 1 = two-session run with an in-train ATC;
-    // user 2 = valid-window ATC; user 3 = exact-1800s boundary pair.
-    write("events.csv",
-      Seq("timestamp,visitorid,event,itemid,transactionid") ++ Seq(
-        s"${t0 * 1000},1,view,101,",
-        s"${(t0 + 600) * 1000},1,addtocart,102,",
-        s"${(t0 + 600 + 1801) * 1000},1,view,103,", // new session (gap 1801)
-        s"${t1 * 1000},2,view,101,",
-        s"${(t1 + 100) * 1000},2,addtocart,101,",
-        s"${t0 * 1000},3,view,101,",
-        s"${(t0 + 1800) * 1000},3,view,102,")) // gap == 1800: SAME session
+    write("events.csv", "timestamp,visitorid,event,itemid,transactionid" +: events)
     // item 101: categoryid changes 10 -> 11 (latest wins, split across parts)
     write("item_properties_part1.csv",
       Seq("timestamp,itemid,property,value") ++ Seq(
@@ -44,10 +47,11 @@ class RetailRocketSpec extends SparkSpec {
     dir.toString
   }
 
+  private def propsParts(dir: String): Seq[String] =
+    Seq(s"$dir/item_properties_part1.csv", s"$dir/item_properties_part2.csv")
+
   private lazy val rawEvents = RetailRocket.readEventsCsv(spark, s"$fixtureDir/events.csv")
-  private lazy val rawProps = RetailRocket.readPropsCsv(
-    spark,
-    Seq(s"$fixtureDir/item_properties_part1.csv", s"$fixtureDir/item_properties_part2.csv"))
+  private lazy val rawProps = RetailRocket.readPropsCsv(spark, propsParts(fixtureDir))
   private lazy val result = RetailRocket.buildAll(spark, rawEvents, rawProps)
 
   test("sessionization: gap rule incl. exact-1800 boundary") {
@@ -147,12 +151,94 @@ class RetailRocketSpec extends SparkSpec {
     val counts = RetailRocket.run(
       spark,
       s"$fixtureDir/events.csv",
-      Seq(s"$fixtureDir/item_properties_part1.csv", s"$fixtureDir/item_properties_part2.csv"),
+      propsParts(fixtureDir),
       out)
     assert(counts("train_rows") == 2L && counts("valid_rows") == 2L)
     assert(counts("train_positive") == 1L && counts("valid_positive") == 1L)
     val train = spark.read.parquet(s"$out/X_train_spark.parquet")
     assert(train.count() == 2L && train.columns.length == 38)
+  }
+
+  test("run: a split with no anchors reads back as zero rows") {
+    // user 2 is the only valid-window activity: without it the valid
+    // matrix is empty, and run must count its empty output as zero
+    val dir = writeFixture(eventRows.filterNot(_.split(",")(1) == "2"))
+    val counts = RetailRocket.run(
+      spark,
+      s"$dir/events.csv",
+      propsParts(dir),
+      Files.createTempDirectory("rr-out").toString)
+    assert(counts("valid_rows") == 0L && counts("valid_positive") == 0L)
+    assert(counts("train_rows") == 2L && counts("train_positive") == 1L)
+  }
+
+  test("run: counts read back from the written matrices equal counts over the buildAll frames") {
+    // a generated corpus with many anchors in both splits
+    val dir = Files.createTempDirectory("rr-gen").toString
+    val winStartMs = 1430438400000L // 2015-05-01
+    val winMs = 92L * 86400 * 1000
+    spark.range(0L, 6000L, 1L, 2)
+      .select(
+        (lit(winStartMs) + (rand(1) * winMs).cast("long")).as("timestamp"),
+        (pow(rand(2), 2.0) * 300).cast("long").as("visitorid"),
+        when(rand(3) < 0.85, "view").otherwise("addtocart").as("event"),
+        (pow(rand(4), 2.0) * 400).cast("long").as("itemid"),
+        lit(null).cast("long").as("transactionid"))
+      .write.option("header", "true").csv(s"$dir/events")
+    spark.range(0L, 400L, 1L, 1)
+      .select(
+        lit(winStartMs - 86400000L).as("timestamp"),
+        col("id").as("itemid"),
+        lit("categoryid").as("property"),
+        (col("id") % 30).cast("string").as("value"))
+      .write.option("header", "true").csv(s"$dir/props")
+    val counts = RetailRocket.run(
+      spark, s"$dir/events", Seq(s"$dir/props"), s"$dir/out")
+    val direct = graft.core.Caches.withScope {
+      val r = RetailRocket.buildAll(
+        spark, RetailRocket.readEventsCsv(spark, s"$dir/events"),
+        RetailRocket.readPropsCsv(spark, Seq(s"$dir/props")))
+      Map(
+        "train_rows" -> r.train.count(),
+        "valid_rows" -> r.valid.count(),
+        "train_positive" -> r.train.filter(col("y") === 1).count(),
+        "valid_positive" -> r.valid.filter(col("y") === 1).count())
+    }
+    assert(counts == direct)
+    assert(direct("train_positive") > 0L && direct("valid_positive") > 0L)
+    assert(direct("train_rows") > direct("train_positive"))
+  }
+
+  test("trainMatrices(cache = true): both covis matrices read one cached capped-events relation") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    // every cached relation read below a cached frame's own one
+    def below(p: SparkPlan): Seq[InMemoryRelation] = p.flatMap {
+      case s: InMemoryTableScanExec => s.relation +: below(s.relation.cacheBuilder.cachedPlan)
+      case a: AdaptiveSparkPlanExec => below(a.inputPlan)
+      case _ => Nil
+    }
+    def cachedInputs(df: org.apache.spark.sql.DataFrame): Seq[InMemoryRelation] =
+      df.queryExecution.optimizedPlan match {
+        case own: InMemoryRelation => below(own.cacheBuilder.cachedPlan)
+        case p => fail(s"expected a cached frame, got ${p.nodeName}")
+      }
+    // inputs read from a fresh copy of the fixture, so no cache left by
+    // another test (`result` pins the sessionized events) matches them
+    val dir = writeFixture(eventRows)
+    graft.core.Caches.withScope {
+      val tm = RetailRocket.trainMatrices(
+        RetailRocket.sessionizeEvents(RetailRocket.readEventsCsv(spark, s"$dir/events.csv")),
+        RetailRocket.itemCategory(RetailRocket.readPropsCsv(spark, propsParts(dir))),
+        RetailRocket.TrainEnd, covisSessionCap = Some(1000), cache = true)
+      val item = cachedInputs(tm.itemCovis)
+      val cat = cachedInputs(tm.catCovis)
+      val shared = item.map(_.cacheBuilder).distinct
+        .filter(b => cat.exists(_.cacheBuilder eq b))
+      assert(shared.size == 1, s"shared cached inputs: ${shared.map(_.cachedName)}")
+      assert(shared.head.cachedPlan.output.map(_.name).contains("session_id"))
+    }
   }
 
   test("maxPrefixEvents cap: output schema/rows survive, capped run is a subset-or-equal") {

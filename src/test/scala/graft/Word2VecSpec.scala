@@ -84,4 +84,32 @@ class Word2VecSpec extends SparkSpec {
     assert(a.keySet == b.keySet)
     a.keySet.foreach(k => assert(a(k) == b(k), s"vectors differ for $k"))
   }
+
+  test("trainWord2VecOrEmpty runs its corpus' exchange once and leaves nothing cached") {
+    // A file-backed corpus: the scan stage on the map side of the
+    // per-session exchange is the only stage that reads nRows input
+    // records (cached-batch reads count batches, not rows).
+    val dir = java.nio.file.Files.createTempDirectory("w2v-corpus").toString
+    val nRows = 3000L
+    spark.range(0L, nRows, 1L, 2)
+      .select(
+        (col("id") % 150).cast("string").as("session_id"),
+        col("id").as("epoch_s"),
+        col("id").as("event_id"),
+        (col("id") * 7 % 20).as("category_id"))
+      .write.mode("overwrite").parquet(dir)
+    val corpus = Embeddings.sessionSequences(spark.read.parquet(dir), "category_id")
+    val m = graft.core.StageMetrics.on(spark)
+    try {
+      m.drain()
+      m.reset()
+      val vocab = Embeddings.trainWord2VecOrEmpty(corpus).count()
+      m.drain()
+      assert(vocab == 20L)
+      val scans = m.stages.count(_.inputRecords == nRows)
+      assert(scans == 1, s"the corpus subtree ran $scans times")
+      assert(corpus.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "the operator's corpus cache must not outlive the call")
+    } finally m.close()
+  }
 }
