@@ -161,27 +161,6 @@ object LevelSample {
           col("ls.level").as("level"),
           col("ls.n_kept").as("n_kept"),
           col("ls.values").as("values")): _*)
-
-  /** Quantile estimates off a sketch frame: one row per (group, ppm),
-    * est = kept-sample order statistic at the pure-integer ppm rank.
-    */
-  def quantilesFromSketch(
-      sketch: DataFrame,
-      groupCols: Seq[String],
-      ppms: Seq[Long]): DataFrame = {
-    val pcol = explode(array(ppms.map(lit): _*)).as("p_ppm")
-    sketch
-      .select(groupCols.map(col) ++ Seq(col("n_kept"), col("values"), pcol): _*)
-      .select(
-        groupCols.map(col) ++ Seq(
-          col("p_ppm"),
-          element_at(
-            col("values"),
-            greatest(
-              lit(1L),
-              expr("(n_kept * p_ppm + 999999) div 1000000")).cast("int"))
-            .as("est_value")): _*)
-  }
 }
 
 /** Canonical sketch state: threshold level, kept count, kept values

@@ -45,10 +45,6 @@ object Sampling {
     df.filter(hashBucketPermille(col(keyCol)) < rate)
   }
 
-  /** Uniform deterministic sample at `permille`/1000 rate. */
-  def hashSample(df: DataFrame, keyCol: String, permille: Int): DataFrame =
-    df.filter(hashBucketPermille(col(keyCol)) < lit(permille))
-
   /** Mixture sampling: per-row keep-rate as an EXPRESSION (permille),
     * so domain-mixing ratios can come from data — a joined config
     * table, a computed column — rather than a hardcoded map. This is

@@ -88,15 +88,6 @@ object Sketches {
       .agg(hll_sketch_estimate(
         hll_sketch_agg(col(keyCol), lit(lgConfigK))).as("approx_distinct"))
 
-  /** Binary HLL sketch per group — the persistable partial. */
-  def hllSketchPerGroup(
-      df: DataFrame,
-      groupCol: String,
-      keyCol: String,
-      lgConfigK: Int = 12): DataFrame =
-    df.groupBy(col(groupCol))
-      .agg(hll_sketch_agg(col(keyCol), lit(lgConfigK)).as("sketch"))
-
   /** Merge previously-built sketches (e.g. per-day partials) into one
     * estimate per group: union-of-sketches == sketch-of-union.
     */

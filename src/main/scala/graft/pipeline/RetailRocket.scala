@@ -335,21 +335,8 @@ object RetailRocket {
   }
 
   /** 5-strategy candidate generation (reference `build_candidates_spark`,
-    * `:225-375`). Returns (session_id, atc_ts, category_id) distinct.
-    *
-    * `covisSessionCap`: drop sessions with more events than this from
-    * the co-visitation self-joins (scale guard; None = reference-exact).
-    */
-  def candidates(
-      atc: DataFrame,
-      events: DataFrame,
-      itemCat: DataFrame,
-      trainCutoff: String,
-      covisSessionCap: Option[Int] = Some(1000)): DataFrame =
-    candidatesWith(atc, events, itemCat,
-      trainMatrices(events, itemCat, trainCutoff, covisSessionCap, cache = false))
-
-  /** [[candidates]] against precomputed [[TrainMatrices]].
+    * `:225-375`) against precomputed [[TrainMatrices]]. Returns
+    * (session_id, atc_ts, category_id) distinct.
     *
     * `sharedPrefix`: a (typically cached) [[prefixWithCategories]]
     * table for this `atc` split — pass the same one to [[featuresWith]]
@@ -416,21 +403,10 @@ object RetailRocket {
       .distinct()
   }
 
-  /** Feature assembly (reference `build_features_spark`, `:441-594`):
-    * 22 base/label columns. Embeddings are attached separately
-    * ([[Embeddings.attachEmbeddings]]) to complete the 38-col matrix.
-    */
-  def features(
-      atc: DataFrame,
-      cands: DataFrame,
-      events: DataFrame,
-      itemCat: DataFrame,
-      trainCutoff: String): DataFrame =
-    featuresWith(atc, cands, events, itemCat,
-      trainMatrices(events, itemCat, trainCutoff, covisSessionCap = None, cache = false))
-
-  /** [[features]] against precomputed [[TrainMatrices]].
-    * `sharedPrefix`: see [[candidatesWith]].
+  /** Feature assembly (reference `build_features_spark`, `:441-594`)
+    * against precomputed [[TrainMatrices]]: 22 base/label columns.
+    * Embeddings are attached separately ([[Embeddings.attachEmbeddings]])
+    * to complete the 38-col matrix. `sharedPrefix`: see [[candidatesWith]].
     */
   def featuresWith(
       atc: DataFrame,
@@ -539,6 +515,16 @@ object RetailRocket {
 
   /** End-to-end: raw event/property frames → 38-column train + valid
     * feature matrices (reference STEPs 2–6 + embedding attach).
+    *
+    * `stage` is the one place a caller observes the build: it sees each
+    * named stage output in pipeline order — `load_sessionize` (the
+    * events), `item_category`, `atc_split` (train, valid), `word2vec`
+    * (the vectors), `candidates` (train, valid), `features` (train,
+    * valid) — with both splits seen before the next stage begins, and
+    * what it returns is used downstream. A caller can force, time or
+    * label a stage there (BaselineBench forces each with
+    * `Caches.materialized`); the default identity leaves every plan as
+    * it is.
     */
   def buildAll(
       spark: SparkSession,
@@ -546,20 +532,22 @@ object RetailRocket {
       rawProps: DataFrame,
       covisSessionCap: Option[Int] = Some(1000),
       maxPrefixEvents: Option[Int] = None,
-      bucketedEventsTable: Option[String] = None): RunResult = {
+      bucketedEventsTable: Option[String] = None,
+      stage: (String, DataFrame) => DataFrame = (_, df) => df): RunResult = {
     // bucketedEventsTable: materialize the sessionized events bucketed
     // by session_id and run every downstream stage off that scan
     // (the 100 TB storage layout — see bucketizeEvents; identical
     // results, RetailRocketSpec pins the equivalence). None = in-memory
     // cache of the sessionize lineage (single-job default).
-    val events = bucketedEventsTable match {
+    val events = stage("load_sessionize", bucketedEventsTable match {
       case Some(t) => bucketizeEvents(sessionizeEvents(rawEvents), t)
       case None => graft.core.Caches.cache(sessionizeEvents(rawEvents))
-    }
-    val itemCat = graft.core.Caches.cache(itemCategory(rawProps))
+    })
+    val itemCat = stage("item_category", graft.core.Caches.cache(itemCategory(rawProps)))
     val atc = graft.core.Caches.cache(atcEvents(events, itemCat))
-    val atcTrain = graft.core.Caches.cache(splitByWindow(atc, TrainStart, TrainEnd))
-    val atcValid = graft.core.Caches.cache(splitByWindow(atc, TrainEnd, ValidEnd))
+    val splits = Seq((TrainStart, TrainEnd), (TrainEnd, ValidEnd)).map { case (from, to) =>
+      stage("atc_split", graft.core.Caches.cache(splitByWindow(atc, from, to)))
+    }
 
     // split-independent matrices computed ONCE for both splits
     val tm = trainMatrices(events, itemCat, TrainEnd, covisSessionCap, cache = true)
@@ -572,22 +560,23 @@ object RetailRocket {
         .withColumn("epoch_s", unix_timestamp(col("ts")))
         .withColumn("event_id", col("item_id")), // tie-break within equal ts
       "category_id")
-    val vectors = Embeddings.trainWord2VecOrEmpty(seqs)
+    val vectors = stage("word2vec", Embeddings.trainWord2VecOrEmpty(seqs))
 
     // ONE cached prefix⋈itemCat subtree per split, shared by the
     // candidate pass (inner form, via the has_cat filter) and the
     // feature pass (left form) — the J3 range join runs twice per
     // buildAll instead of four times.
-    def assemble(atcSplit: DataFrame): DataFrame = {
-      val prefix = graft.core.Caches.cache(prefixWithCategories(atcSplit, events, itemCat, maxPrefixEvents))
-      val cands =
-        candidatesWith(atcSplit, events, itemCat, tm, maxPrefixEvents, Some(prefix))
-      Embeddings.attachEmbeddings(
-        featuresWith(atcSplit, cands, events, itemCat, tm, maxPrefixEvents, Some(prefix)),
-        vectors, "category_id", dims = 16)
+    val prefixes = splits.map(s =>
+      graft.core.Caches.cache(prefixWithCategories(s, events, itemCat, maxPrefixEvents)))
+    val cands = splits.zip(prefixes).map { case (s, p) =>
+      stage("candidates", candidatesWith(s, events, itemCat, tm, maxPrefixEvents, Some(p)))
     }
-
-    RunResult(assemble(atcTrain), assemble(atcValid))
+    val Seq(train, valid) = splits.lazyZip(cands).lazyZip(prefixes).map { (s, c, p) =>
+      stage("features", Embeddings.attachEmbeddings(
+        featuresWith(s, c, events, itemCat, tm, maxPrefixEvents, Some(p)),
+        vectors, "category_id", dims = 16))
+    }
+    RunResult(train, valid)
   }
 
   /** File-level entry point — the reference's CLI contract
@@ -600,6 +589,9 @@ object RetailRocket {
     * (None = reference-exact). At large event counts set ~50: measured
     * at 20M events it cuts the build 533.7 s → 251.2 s while retaining
     * 98% of output rows (DESIGN.md "prefix blow-up").
+    *
+    * `stage`: see [[buildAll]]; it runs inside this call's cache scope,
+    * so caches it creates are dropped on return with the build's own.
     */
   def run(
       spark: SparkSession,
@@ -607,14 +599,15 @@ object RetailRocket {
       propsCsvs: Seq[String],
       outDir: String,
       covisSessionCap: Option[Int] = Some(1000),
-      maxPrefixEvents: Option[Int] = None): Map[String, Long] =
+      maxPrefixEvents: Option[Int] = None,
+      stage: (String, DataFrame) => DataFrame = (_, df) => df): Map[String, Long] =
     // every intra-build cache is dropped once the matrices are written
     // and counted — a long-lived session can run() repeatedly without
     // accumulating pinned InMemoryRelations
     graft.core.Caches.withScope {
       val result = buildAll(
         spark, readEventsCsv(spark, eventsCsv), readPropsCsv(spark, propsCsvs), covisSessionCap,
-        maxPrefixEvents)
+        maxPrefixEvents, stage = stage)
       // The counts come from one aggregate over each written file set,
       // not from actions on the result frames: every action renders its
       // plan, and these plans expand every nested cached relation of the
@@ -624,7 +617,9 @@ object RetailRocket {
       // split with no rows.
       def written(df: DataFrame, name: String): (Long, Long) = {
         val path = s"$outDir/X_${name}_spark.parquet"
-        graft.core.Sinks.writeParquet(df, path, maxRecordsPerFile = Some(50000L))
+        // bounded row groups keep the matrices scan-parallel for the
+        // training jobs that read them (DESIGN.md, "Flagship save")
+        graft.core.Sinks.writeScanParallelParquet(df, path, maxRecordsPerFile = Some(50000L))
         val r = spark.read.schema(df.schema).parquet(path)
           .agg(count(lit(1)), count(when(col("y") === 1, true)))
           .head()

@@ -172,8 +172,8 @@ class RetailRocketSpec extends SparkSpec {
     assert(counts("train_rows") == 2L && counts("train_positive") == 1L)
   }
 
-  test("run: counts read back from the written matrices equal counts over the buildAll frames") {
-    // a generated corpus with many anchors in both splits
+  // a generated corpus with many anchors in both splits
+  private lazy val generatedDir: String = {
     val dir = Files.createTempDirectory("rr-gen").toString
     val winStartMs = 1430438400000L // 2015-05-01
     val winMs = 92L * 86400 * 1000
@@ -192,6 +192,11 @@ class RetailRocketSpec extends SparkSpec {
         lit("categoryid").as("property"),
         (col("id") % 30).cast("string").as("value"))
       .write.option("header", "true").csv(s"$dir/props")
+    dir
+  }
+
+  test("run: counts read back from the written matrices equal counts over the buildAll frames") {
+    val dir = generatedDir
     val counts = RetailRocket.run(
       spark, s"$dir/events", Seq(s"$dir/props"), s"$dir/out")
     val direct = graft.core.Caches.withScope {
@@ -207,6 +212,31 @@ class RetailRocketSpec extends SparkSpec {
     assert(counts == direct)
     assert(direct("train_positive") > 0L && direct("valid_positive") > 0L)
     assert(direct("train_rows") > direct("train_positive"))
+  }
+
+  test("run with a forcing stage hook reads back the same counts and relational-column digest as run without one") {
+    // row count + order-independent sum of per-row hashes over the 22
+    // relational columns (the Word2Vec dims are not bit-reproducible)
+    def digest(out: String): Seq[(Long, Long)] =
+      Seq("train", "valid").map { name =>
+        val df = spark.read.parquet(s"$out/X_${name}_spark.parquet")
+        val cols = df.columns.filterNot(_.startsWith("cat_emb_")).map(col).toIndexedSeq
+        val r = df.agg(count(lit(1)), coalesce(sum(pmod(xxhash64(cols: _*), lit(1000000007L))), lit(0L)))
+          .head()
+        (r.getLong(0), r.getLong(1))
+      }
+    def build(stage: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame) = {
+      val out = Files.createTempDirectory("rr-out").toString
+      (RetailRocket.run(spark, s"$generatedDir/events", Seq(s"$generatedDir/props"), out, stage = stage),
+        digest(out))
+    }
+    val seen = scala.collection.mutable.ArrayBuffer.empty[String]
+    val forced = build { (name, df) => seen += name; graft.core.Caches.materialized(df) }
+    val plain = build((_, df) => df)
+    assert(forced == plain)
+    assert(plain._1("train_rows") > 0L && plain._1("valid_rows") > 0L)
+    assert(seen.toSeq == Seq("load_sessionize", "item_category", "atc_split", "atc_split",
+      "word2vec", "candidates", "candidates", "features", "features"))
   }
 
   test("trainMatrices(cache = true): both covis matrices read one cached capped-events relation") {

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint that pins the tool surface: one session factory, one
-  * listener and seven entry points. A new tool becomes a mode of
-  * Inspect or Probe, not another main with its own session set-up.
+  * listener, seven entry points and one RetailRocket build wiring. A
+  * new tool becomes a mode of Inspect or Probe, not another main with
+  * its own session set-up.
   */
 class ToolSurfaceSpec extends AnyFunSuite {
 
@@ -51,5 +52,15 @@ class ToolSurfaceSpec extends AnyFunSuite {
     val bad = offenders("""\bdef\s+main\s*\(|\bextends\s+App\b""", mains)
     assert(bad.isEmpty, s"add a mode to Inspect or Probe instead of a new main: $bad")
     mains.foreach(p => assert(sources.exists(_._1 == p), s"$p missing"))
+  }
+
+  test("only pipeline/RetailRocket.scala wires the build") {
+    // tools observe the build's stages through buildAll's stage hook;
+    // a hand-wired stage sequence elsewhere measures another program
+    val bad = offenders(
+      """\b(candidatesWith|featuresWith|prefixWithCategories|trainMatrices)\s*\(""",
+      Set("main/scala/graft/pipeline/RetailRocket.scala"))
+      .filter(_.startsWith("main/"))
+    assert(bad.isEmpty, s"observe the build through RetailRocket.buildAll's stage hook: $bad")
   }
 }
