@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.LocalSpark
 import graft.pipeline.RetailRocket
 import org.apache.spark.sql.functions._
 
@@ -21,7 +22,7 @@ object BaselineBench {
     // optional third arg: recency cap on prefix events (scale guard;
     // absent = reference-exact)
     val maxPrefix = args.drop(2).headOption.map(_.toInt)
-    val spark = graft.core.LocalSpark(32)
+    val spark = LocalSpark(LocalSpark.cores(32))
 
     // a stage's time is the interval since the previous stamp
     val stageSec = scala.collection.mutable.LinkedHashMap.empty[String, Double]

@@ -1,9 +1,14 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 
 import graft.core.{Caches, LocalSpark, StageMetrics}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.{RangeExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. local[32] + 32 shuffle
@@ -11,130 +16,106 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bench {
 
-  /** Per-query plan fingerprint `e<exchanges>s<scans>h<md5/8>` over the
-    * INITIAL physical plan (pre-AQE — runtime re-plans vary with
-    * contention, the initial plan only with code/data). Expression ids
-    * and plan ids are normalized out, so the fingerprint is byte-stable
-    * across re-runs of the same build on the same data: a wall-clock
-    * regression at an UNCHANGED fingerprint is host contention, a
-    * changed fingerprint is a plan change — attributable from the
-    * artifact alone, no quiet-box reproduction needed.
+  /** Per-query plan stamp `e<exchanges>s<scans>h<md5/8>` over the
+    * INITIAL physical plan: pre-AQE, because runtime re-plans vary with
+    * contention and the initial plan only with code and data. The stamp
+    * is byte-stable across re-runs of the same build on the same data,
+    * so a wall-clock regression at an UNCHANGED stamp is host contention
+    * and a changed stamp is a plan change, attributable from the
+    * artifact alone.
+    *
+    * `sparkPlan` is pre-EnsureRequirements (no Exchange nodes at all),
+    * and `executedPlan` under AQE is a single AdaptiveSparkPlanExec LEAF
+    * whose toString embeds the contention-dependent runtime final plan.
+    * The deterministic middle ground is the adaptive node's immutable
+    * `initialPlan`: the exchange-placed plan before any runtime re-plan.
     */
-  /** Pre-AQE physical plan WITH exchanges: `sparkPlan` is pre-
-    * EnsureRequirements (no Exchange nodes at all), and `executedPlan`
-    * under AQE is a single AdaptiveSparkPlanExec LEAF whose toString
-    * embeds the runtime final plan (contention-dependent — coalesce
-    * counts, stage markers). The deterministic middle ground is the
-    * adaptive node's immutable case-class field `inputPlan`: the
-    * initial exchange-placed plan, before any runtime re-plan.
-    */
-  private def initialPlan(
-      p: org.apache.spark.sql.execution.SparkPlan): org.apache.spark.sql.execution.SparkPlan =
-    p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        initialPlan(a.initialPlan)
-      case other => other
-    }
-
-  /** The plan text the fingerprint hashes: per-node simpleStrings (NOT
-    * treeString — that embeds innerChildren, i.e. cached subtrees'
-    * adaptive final plans, which vary run-to-run), with per-run
-    * identifiers (expression ids, plan ids, JVM identity hashes)
-    * normalized out.
-    */
-  def normalizedPlan(df: org.apache.spark.sql.DataFrame): String = {
-    val base = initialPlan(df.queryExecution.executedPlan)
-      .collect { case n => n.simpleString(250) }
-      .mkString("\n")
-      .replaceAll("#\\d+", "#x")
-      .replaceAll("plan_id=\\d+", "plan_id=x")
-      .replaceAll("\\[id=\\d+\\]", "")
-      .replaceAll("@[0-9a-f]{6,}", "@x")
-      // JVM lambda identities (closure nodes like MapPartitions print
-      // `Class$$Lambda$1234/0x00007f...` — the index is class-load-order
-      // dependent, the hidden-class address is random per JVM)
-      .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda\\$x")
-      .replaceAll("/0x[0-9a-f]{8,}", "/0x")
-      // HOF lambda-variable names (`lambda x_21#123`): the x_N counter
-      // is a session-global atomic incremented per lambda CONSTRUCTION,
-      // so a query's fingerprint shifted whenever any earlier-run query
-      // gained or lost a HOF (r16: de-HOFing q28's pair expansion moved
-      // q50/q75's hashes). Construction-order is environment, not plan
-      // shape — but DISTINCT variables in one plan must stay distinct
-      // (a flat `x_N` collapse made `(a, b) -> a` hash like
-      // `(a, b) -> b`), so renumber by first occurrence instead.
-      .replaceAll("RoundRobinPartitioning\\(\\d+\\)", "RoundRobinPartitioning(N)")
-      // Range leaves print their split count = default parallelism —
-      // session config, same class as shuffle partition counts (was
-      // masked by always stamping at matching CPU configs; exposed by
-      // the r15 anchored-count regex validation at CPUS=16 vs 32)
-      .replaceAll("splits=\\d+", "splits=N")
-      // Data DIRECTORY is environment, not plan shape: scan nodes embed
-      // the input path (sf0.01 vs sf0.1 differed in 183/308 otherwise
-      // structurally-identical plans), which broke the Verify(gate SF)
-      // ↔ Bench(bench SF) linkage the fingerprint exists for. Genuine
-      // cross-SF plan differences (size-based join strategy shifts)
-      // stay visible in the e/s counts and the remaining hash.
-      .replaceAll("file:/[^\\s,\\)\\]]*", "file:/x")
-      .replaceAll("/root/testdata/[^\\s,\\)\\]]*", "/x")
-      .replaceAll("/tmp/[^\\s,\\)\\]]*", "/x")
-      // Driver-built binary payloads (the q76 decontam bloom bitmap
-      // prints as a giant hex literal in might_contain) are data, not
-      // plan shape — same class as codebook values. No legitimate plan
-      // token is a 64+-digit hex literal.
-      .replaceAll("0x[0-9a-fA-F]{64,}", "0xBLOB")
-    // Partition COUNTS are session config (spark.sql.shuffle.partitions),
-    // not plan shape: normalize them so Verify (driver-chosen CPU count)
-    // and Bench (32) fingerprint identically on the same plan. The count
-    // match is ANCHORED to the partitioning spec's own closing paren via
-    // a balanced-paren content pattern (ADVICE r14: the previous greedy
-    // `(.*), \d+\)` pinned the LAST `, <n>)` on the line, and fixpoint
-    // passes then walked backwards normalizing unrelated trailing integer
-    // literals — round(x, 2) after a spec could mask a real expression
-    // change). Depth-5 nesting covers every spec in the contract (deepest
-    // observed: 3); `[^()]*` atoms are paren-free so the pattern cannot
-    // backtrack catastrophically. The (?m) `$`-anchored variant catches a
-    // spec whose closing paren was cut by simpleString(250) truncation.
-    var s = renumberLambdas(base)
-    var prev = ""
-    while (prev != s) {
-      prev = s
-      s = s
-        .replaceAll(s"(hashpartitioning|rangepartitioning)\\(($balanced5), \\d+\\)", "$1($2, N)")
-        .replaceAll(s"(?m)(hashpartitioning|rangepartitioning)\\(($balanced5), \\d+$$", "$1($2, N")
-    }
-    s
+  private def initialPlan(p: SparkPlan): SparkPlan = p match {
+    case a: AdaptiveSparkPlanExec => initialPlan(a.initialPlan)
+    case other => other
   }
 
-  /** Canonicalize HOF lambda-variable numbers per plan: each distinct
-    * `lambda x_<k>` is renumbered to its first-occurrence index in the
-    * plan text. Removes the session-global construction-counter noise
-    * while keeping distinct variables distinguishable (normalization
-    * v6).
+  /** The plan with its partition and slice COUNTS set to one constant
+    * (0). Counts are session config (`spark.sql.shuffle.partitions`,
+    * the leaf-node parallelism a `Range` without explicit slices
+    * prints), not plan shape: Verify at any CPU count and Bench at 32
+    * stamp the same plan alike. Done on the tree, so no integer literal
+    * elsewhere in a node's text can be mistaken for a count.
+    */
+  private def structural(p: SparkPlan): SparkPlan = p.transformUpWithSubqueries {
+    case e: ShuffleExchangeExec => e.outputPartitioning match {
+      case h: HashPartitioning => e.copy(outputPartitioning = h.copy(numPartitions = 0))
+      case r: RangePartitioning => e.copy(outputPartitioning = r.copy(numPartitions = 0))
+      case _: RoundRobinPartitioning => e.copy(outputPartitioning = RoundRobinPartitioning(0))
+      case _ => e
+    }
+    case r: RangeExec => r.copy(range = r.range.copy(numSlices = Some(0)))
+  }
+
+  /** Per-run identifiers the node texts still carry, in order: expression
+    * ids, plan ids, scan paths (the data DIRECTORY is environment: sf0.01
+    * and sf0.1 plans must stamp alike), JVM identity hashes, closure
+    * class names (`Class$$Lambda$1234/0x00007f...`: a class-load-order
+    * index and a per-JVM hidden-class address), and driver-built binary
+    * payloads (the q76 decontam bloom bitmap prints as a giant hex
+    * literal in might_contain; no plan token is a 64+-digit hex).
+    */
+  private val identifiers: Seq[(scala.util.matching.Regex, String)] = Seq(
+    "#\\d+" -> "#x",
+    "plan_id=\\d+" -> "plan_id=x",
+    "file:/[^\\s,\\)\\]]*" -> "file:/x",
+    "@[0-9a-f]{6,}" -> "@x",
+    "Lambda\\$\\d+/0x[0-9a-f]+" -> "Lambda\\$x",
+    "0x[0-9a-fA-F]{64,}" -> "0xBLOB"
+  ).map { case (re, to) => re.r -> to }
+
+  /** The text the stamp hashes: the per-node simpleStrings of the
+    * structural initial plan, then the same for the cached plan of each
+    * InMemoryTableScan, depth first and once per cache, so a plan change
+    * below a cached relation changes the stamp. (Not treeString: that
+    * embeds cached subtrees' adaptive FINAL plans, which vary
+    * run-to-run.) Per-run identifiers are normalized out.
+    */
+  def normalizedPlan(df: DataFrame): String = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    val lines = mutable.ArrayBuffer.empty[String]
+    def walk(p: SparkPlan): Unit = {
+      val plan = structural(initialPlan(p))
+      lines ++= plan.collect { case n => n.simpleString(250) }
+      plan.foreach {
+        case s: InMemoryTableScanExec if seen.add(s.relation.cacheBuilder) =>
+          walk(s.relation.cacheBuilder.cachedPlan)
+        case _ =>
+      }
+    }
+    walk(df.queryExecution.executedPlan)
+    renumberLambdas(identifiers.foldLeft(lines.mkString("\n")) { case (t, (re, to)) =>
+      re.replaceAllIn(t, to)
+    })
+  }
+
+  /** Canonicalize HOF lambda-variable numbers per plan. The Scala API
+    * names a lambda's variables `x_<k>`, `y_<k>`, `z_<k>` from one
+    * session-global counter incremented per lambda CONSTRUCTION, so a
+    * flat number shifts whenever an earlier-built frame gains or loses a
+    * HOF. Each distinct variable is renumbered to its first-occurrence
+    * index in the plan text instead: construction order drops out, and
+    * distinct variables stay distinct (`(a, b) -> a` vs `(a, b) -> b`).
     */
   private def renumberLambdas(t: String): String = {
-    val m = java.util.regex.Pattern.compile("lambda x_(\\d+)").matcher(t)
-    val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
+    val m = java.util.regex.Pattern.compile("lambda ([xyz])_(\\d+)").matcher(t)
+    val ids = mutable.LinkedHashMap[String, Int]()
     val sb = new StringBuffer
     while (m.find()) {
-      val idx = ids.getOrElseUpdate(m.group(1), ids.size)
-      m.appendReplacement(sb, s"lambda x_$idx")
+      val idx = ids.getOrElseUpdate(m.group(), ids.size)
+      m.appendReplacement(sb, s"lambda ${m.group(1)}_$idx")
     }
     m.appendTail(sb)
     sb.toString
   }
 
-  /** Regex fragment matching paren-balanced content up to 5 nesting
-    * levels (each level: paren-free runs interleaved with one-deeper
-    * parenthesized groups).
-    */
-  private val balanced5: String = {
-    val atom = "[^()]*"
-    def lvl(inner: String) = s"$atom(?:\\($inner\\)$atom)*"
-    lvl(lvl(lvl(lvl(lvl(atom)))))
-  }
-
-  def planFingerprint(df: org.apache.spark.sql.DataFrame): String = {
+  def planFingerprint(df: DataFrame): String = {
     val nodes = initialPlan(df.queryExecution.executedPlan)
       .collect { case n => n.nodeName }
     val exchanges = nodes.count(_.contains("Exchange"))
@@ -146,21 +127,15 @@ object Bench {
       .map("%02x".format(_)).mkString.take(8)
     s"e${exchanges}s${scans}h$h"
   }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = LocalSpark(LocalSpark.cores(32))
     val work = SparkEntry.queries.toSeq.sortBy(_._1)
     // Pre-pass before the timed loop; the timed methodology (toRdd.count()
-    // full-plan basis) is unchanged. SPARK_GRAFT_FP_DIR dumps each
-    // normalized plan text, so a cross-run drift can be diffed to its
-    // substring.
-    val fpPre: Map[String, String] = fingerprints(spark, sfDir, work, (name, df) =>
-      sys.env.get("SPARK_GRAFT_FP_DIR").foreach { dir =>
-        try {
-          Files.createDirectories(Paths.get(dir))
-          Files.write(Paths.get(dir, s"$name.txt"), normalizedPlan(df).getBytes("UTF-8"))
-        } catch { case _: Throwable => () }
-      }).toMap
+    // full-plan basis) is unchanged. `Inspect <q> fp` prints one query's
+    // stamped text.
+    val fpPre: Map[String, String] = fingerprints(spark, sfDir, work).toMap
     // Warm-up outside the timed loop: JIT + codegen + filesystem init
     // otherwise land entirely on the alphabetically-first query touching
     // each table/code path. Touch every input table and the hot

@@ -24,9 +24,10 @@ object Inspect {
       |          executed plan's first 60 lines
       |  plan    the FULL formatted explain (tree + per-node details);
       |          `plan tree` prints the tree only
-      |  fp      the normalized plan text Bench.planFingerprint hashes, then
-      |          the stamp, both from the construction-only pre-pass
-      |          (Bench.fingerprints, the basis Bench, Verify and FpAll use)
+      |  fp      the stamped text Bench.planFingerprint hashes (the query's
+      |          own plan, then each cached subtree's), then the stamp, both
+      |          from the construction-only pre-pass (Bench.fingerprints, the
+      |          basis Bench, Verify and FpAll use)
       |  lazy    (time/tasks/jobs/stages) run under Caches.constructionMode:
       |          eager cache sites degrade to lazy caches, the per-site
       |          eager-vs-lazy A/B

@@ -2,11 +2,17 @@
 """Diff two fingerprint dumps (graft.FpAll / bench plan_fingerprints /
 Verify fingerprints.json): prints queries added, removed, and changed.
 
+A changed stamp `e<exchanges>s<scans>h<md5/8>` is SHAPE when the exchange
+or scan count differs (or either side failed, `-`), HASH when only the
+hash differs. A re-base of the stamp's normalizer may change any hash
+but must show no SHAPE change.
+
 Usage: python3 tools/fp_diff.py <old.json-line-or-file> <new...>
 Accepts either a bare JSON object file (fingerprints.json) or a log
 whose lines include {"metric":"fp_all","queries":{...}}-style objects.
 """
 import json
+import re
 import sys
 
 
@@ -42,20 +48,31 @@ def load(path):
     return obj.get("queries", obj)
 
 
+STAMP = re.compile(r"(e\d+s\d+)h[0-9a-f]+")
+
+
+def shape(fp):
+    m = STAMP.fullmatch(fp)
+    return m.group(1) if m else None
+
+
 def main(old_path, new_path):
     old, new = load(old_path), load(new_path)
     added = sorted(set(new) - set(old))
     removed = sorted(set(old) - set(new))
     changed = sorted(k for k in set(old) & set(new) if old[k] != new[k])
+    hashed = {k for k in changed
+              if shape(old[k]) is not None and shape(old[k]) == shape(new[k])}
     for k in added:
         print(f"ADDED   {k} {new[k]}")
     for k in removed:
         print(f"REMOVED {k} {old[k]}")
     for k in changed:
-        print(f"CHANGED {k} {old[k]} -> {new[k]}")
+        kind = "HASH " if k in hashed else "SHAPE"
+        print(f"{kind}   {k} {old[k]} -> {new[k]}")
     same = len(set(old) & set(new)) - len(changed)
-    print(f"== {same} unchanged / {len(changed)} changed / "
-          f"{len(added)} added / {len(removed)} removed ==")
+    print(f"== {same} unchanged / {len(changed) - len(hashed)} shape / "
+          f"{len(hashed)} hash / {len(added)} added / {len(removed)} removed ==")
 
 
 if __name__ == "__main__":
