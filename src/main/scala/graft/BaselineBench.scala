@@ -64,6 +64,10 @@ object BaselineBench {
           .otherwise("1").as("value"))
     props.coalesce(4).write.mode("overwrite").option("header", "true")
       .csv(s"$outDir/props_csv")
+    // the run's structure: stages, tasks and shuffle of the whole build
+    val metrics = graft.core.StageMetrics.on(spark)
+    metrics.drain() // events of the generation still queued
+    metrics.reset()
     stamp("generate csv")
 
     // RetailRocket.run as users run it, each buildAll stage forced
@@ -79,7 +83,11 @@ object BaselineBench {
       stage = (name, df) => { val m = graft.core.Caches.materialized(df); stamp(name); m })
     stamp("save")
     val totalS = (last - t0) / 1e9
+    metrics.drain()
     stageSec.foreach { case (name, s) => println(f"[baseline] $name%-22s $s%8.1f s") }
+    println(f"[baseline] run: ${metrics.stages.size} stages, ${metrics.tasks} tasks, " +
+      f"shuffle write ${metrics.shuffleWriteBytes / 1e6}%.1f MB")
+    metrics.close()
     val stages = Seq("load_sessionize", "candidates", "word2vec", "features", "save")
       .map(k => s""""$k":${stageSec(k)}""").mkString(",")
     println(

@@ -1,7 +1,9 @@
 package graft
 
 import graft.core.{Caches, LocalSpark, StageMetrics}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ExplainMode
 
 /** One-query inspection on `local[SPARK_GRAFT_CPUS]` (default 32). The
@@ -24,11 +26,15 @@ object Inspect {
       |          executed plan's first 60 lines
       |  plan    the FULL formatted explain (tree + per-node details);
       |          `plan tree` prints the tree only
+      |  codegen compiles and compile seconds (summed over threads) of one
+      |          cold run, then of one warm run (deltas of
+      |          CodeGenerator.compileTime and CodegenMetrics' compilation
+      |          histogram)
       |  fp      the stamped text Bench.planFingerprint hashes (the query's
       |          own plan, then each cached subtree's), then the stamp, both
       |          from the construction-only pre-pass (Bench.fingerprints, the
       |          basis Bench, Verify and FpAll use)
-      |  lazy    (time/tasks/jobs/stages) run under Caches.constructionMode:
+      |  lazy    (time/tasks/jobs/stages/codegen) run under Caches.constructionMode:
       |          eager cache sites degrade to lazy caches, the per-site
       |          eager-vs-lazy A/B
       |sfDir defaults to $DefaultSf.""".stripMargin
@@ -42,7 +48,7 @@ object Inspect {
   }
 
   def main(args: Array[String]): Unit = {
-    val modes = Set("time", "tasks", "jobs", "stages", "plan", "fp")
+    val modes = Set("time", "tasks", "jobs", "stages", "plan", "fp", "codegen")
     if (args.length < 2 || !modes(args(1)) || !SparkEntry.queries.contains(args(0))) {
       System.err.println(usage)
       sys.exit(2)
@@ -62,20 +68,42 @@ object Inspect {
         val (text, stamp) = fp(spark, name, sfDir)
         println(text)
         println(s"[fp] $name $stamp")
+      case "codegen" => codegen(spark, name, sfDir, lazyMode)
       case _ => execute(spark, name, mode, sfDir, lazyMode)
     }
     spark.stop()
   }
 
+  /** One full-plan run of `name` in its own cache scope. */
+  private def runOnce(
+      spark: SparkSession, name: String, sfDir: String, lazyMode: Boolean): (DataFrame, Long) = {
+    def go = Caches.withScope {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      (df, df.queryExecution.toRdd.count())
+    }
+    if (lazyMode) Caches.constructionMode(go) else go
+  }
+
+  /** The codegen layer: the first run of the query in this JVM, then a
+    * second one, each with the compiles it caused on every thread.
+    */
+  private def codegen(spark: SparkSession, name: String, sfDir: String, lazyMode: Boolean): Unit = {
+    def counters = (CodeGenerator.compileTime, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    val tag = name + (if (lazyMode) "(lazy)" else "")
+    Seq("cold", "warm").foreach { pass =>
+      val (ns0, n0) = counters
+      val t0 = System.nanoTime()
+      val (_, rows) = runOnce(spark, name, sfDir, lazyMode)
+      val wall = (System.nanoTime() - t0) / 1e9
+      val (ns1, n1) = counters
+      println(f"[codegen] $tag $pass%-4s compiles=${n1 - n0}%4d compile=${(ns1 - ns0) / 1e9}%.2f s " +
+        f"wall=$wall%.2f s rows=$rows")
+    }
+  }
+
   private def execute(
       spark: SparkSession, name: String, mode: String, sfDir: String, lazyMode: Boolean): Unit = {
-    def run(): (DataFrame, Long) = {
-      def go = Caches.withScope {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        (df, df.queryExecution.toRdd.count())
-      }
-      if (lazyMode) Caches.constructionMode(go) else go
-    }
+    def run(): (DataFrame, Long) = runOnce(spark, name, sfDir, lazyMode)
     val m = StageMetrics.on(spark)
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warm-up
     // a full discarded run: codegen and file caches at steady state, so

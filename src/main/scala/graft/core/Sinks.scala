@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types.StructType
 
 /** Parquet sinks (reference S2/S3, SURVEY.md §2.1: overwrite snappy
@@ -57,12 +59,60 @@ object Sinks {
       path: String,
       rowGroupBytes: Long = 8L * 1024 * 1024,
       mode: SaveMode = SaveMode.Overwrite,
-      maxRecordsPerFile: Option[Long] = None): Unit = {
+      maxRecordsPerFile: Option[Long] = None,
+      partitionByCols: Seq[String] = Nil): Unit = {
     var w = df.write.mode(mode)
       .option("compression", "snappy")
       .option("parquet.block.size", rowGroupBytes.toString)
     maxRecordsPerFile.foreach(n => w = w.option("maxRecordsPerFile", n.toString))
+    if (partitionByCols.nonEmpty) w = w.partitionBy(partitionByCols: _*)
     w.parquet(path)
+  }
+
+  /** One write job for several tables: each row of `df` goes to the
+    * table `tables` names for its `key` value, at `dir/<name>`, in the
+    * files [[writeScanParallelParquet]] writes (snappy, bounded row
+    * groups, `maxRecordsPerFile`). The job writes partitioned on `key`
+    * into a temporary directory under `dir`, then renames each
+    * partition directory to its table, replacing what is there, and
+    * marks it `_SUCCESS` like a direct write. A table no row is keyed
+    * to is written empty with `df`'s schema, so it still reads back as
+    * zero rows; a key outside `tables` fails the call.
+    *
+    * Writing the tables one by one runs `df`'s plan once per table:
+    * every subtree below the split point is recomputed or must be
+    * cached, and each write is its own SQL execution with its own plan
+    * renderings and AQE re-plans (DESIGN.md, "One anchor pass for both
+    * splits").
+    */
+  def writeParquetByKey(
+      df: DataFrame,
+      key: Column,
+      dir: String,
+      tables: Map[String, String],
+      rowGroupBytes: Long = 8L * 1024 * 1024,
+      maxRecordsPerFile: Option[Long] = None): Unit = {
+    val spark = df.sparkSession
+    val keyCol = "__table"
+    val tmp = new Path(dir, s"_tmp_${java.util.UUID.randomUUID()}")
+    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      writeScanParallelParquet(df.withColumn(keyCol, key), tmp.toString, rowGroupBytes,
+        SaveMode.ErrorIfExists, maxRecordsPerFile, partitionByCols = Seq(keyCol))
+      val parts = fs.listStatus(tmp).filter(_.isDirectory).map(_.getPath.getName).toSet
+      val unknown = parts -- tables.keys.map(ExternalCatalogUtils.getPartitionPathString(keyCol, _))
+      require(unknown.isEmpty, s"writeParquetByKey: rows keyed outside $tables: $unknown")
+      tables.foreach { case (value, name) =>
+        val part = new Path(tmp, ExternalCatalogUtils.getPartitionPathString(keyCol, value))
+        val target = new Path(dir, name)
+        fs.delete(target, true)
+        if (!fs.exists(part))
+          writeScanParallelParquet(spark.createDataFrame(java.util.List.of[Row](), df.schema),
+            target.toString, rowGroupBytes, SaveMode.ErrorIfExists)
+        else if (fs.rename(part, target)) fs.create(new Path(target, "_SUCCESS")).close()
+        else throw new java.io.IOException(s"writeParquetByKey: cannot move $part to $target")
+      }
+    } finally fs.delete(tmp, true)
   }
 
   /** Range-clustered sorted write: `repartitionByRange` on the cluster

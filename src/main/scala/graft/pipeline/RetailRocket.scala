@@ -220,11 +220,11 @@ object RetailRocket {
     * [[featuresWith]] (left form). `has_cat = 1` marks rows whose item
     * has a category row, so the inner form is a FILTER over this one
     * lineage instead of a second join — the CacheManager can then dedup
-    * all four consumers (2 splits × candidates+features) against two
-    * cached builds instead of running the most expensive shuffle in the
-    * pipeline four times. (A plain `category_id IS NOT NULL` filter
-    * would be wrong if an item's latest category value is null — the
-    * marker keeps inner-join semantics exactly.)
+    * both consumers against one cached build instead of running the
+    * most expensive shuffle in the pipeline twice. (A plain
+    * `category_id IS NOT NULL` filter would be wrong if an item's
+    * latest category value is null — the marker keeps inner-join
+    * semantics exactly.)
     */
   def prefixWithCategories(
       atc: DataFrame,
@@ -234,8 +234,8 @@ object RetailRocket {
     prefixEvents(atc, events, maxPrefixEvents)
       .join(broadcast(itemCat.withColumn("has_cat", lit(1))), Seq("item_id"), "left")
 
-  /** Split-independent matrices shared by BOTH the train and valid
-    * candidate/feature passes — everything here depends only on
+  /** Split-independent matrices read by the candidate and feature
+    * passes of both splits — everything here depends only on
     * (events, itemCat, trainCutoff), never on the anchor split, so
     * [[buildAll]] computes and caches them ONCE instead of twice (the
     * two co-visitation self-joins are the most expensive subtrees in
@@ -339,8 +339,8 @@ object RetailRocket {
     * (session_id, atc_ts, category_id) distinct.
     *
     * `sharedPrefix`: a (typically cached) [[prefixWithCategories]]
-    * table for this `atc` split — pass the same one to [[featuresWith]]
-    * so the prefix range-join subtree is computed once per split.
+    * table for these `atc` anchors — pass the same one to
+    * [[featuresWith]] so the prefix range-join subtree is computed once.
     */
   def candidatesWith(
       atc: DataFrame,
@@ -513,14 +513,18 @@ object RetailRocket {
   /** Per-(split) result of a full run. */
   final case class RunResult(train: DataFrame, valid: DataFrame)
 
+  /** The split of an [[anchorPass]] row, whose `atc_ts` is in `[TrainStart, ValidEnd)`. */
+  private def splitOf: Column =
+    when(col("atc_ts") < lit(TrainEnd).cast("timestamp"), "train").otherwise("valid")
+
   /** End-to-end: raw event/property frames → 38-column train + valid
-    * feature matrices (reference STEPs 2–6 + embedding attach).
+    * feature matrices (reference STEPs 2–6 + embedding attach). The two
+    * are the `train`/`valid` views of [[anchorPass]]'s one frame.
     *
     * `stage` is the one place a caller observes the build: it sees each
-    * named stage output in pipeline order — `load_sessionize` (the
-    * events), `item_category`, `atc_split` (train, valid), `word2vec`
-    * (the vectors), `candidates` (train, valid), `features` (train,
-    * valid) — with both splits seen before the next stage begins, and
+    * named stage output once, in pipeline order — `load_sessionize` (the
+    * events), `item_category`, `atc_split` (the anchors of both
+    * splits), `word2vec` (the vectors), `candidates`, `features` — and
     * what it returns is used downstream. A caller can force, time or
     * label a stage there (BaselineBench forces each with
     * `Caches.materialized`); the default identity leaves every plan as
@@ -534,6 +538,25 @@ object RetailRocket {
       maxPrefixEvents: Option[Int] = None,
       bucketedEventsTable: Option[String] = None,
       stage: (String, DataFrame) => DataFrame = (_, df) => df): RunResult = {
+    val all = anchorPass(rawEvents, rawProps, covisSessionCap, maxPrefixEvents,
+      bucketedEventsTable, stage)
+    RunResult(all.filter(splitOf === "train"), all.filter(splitOf === "valid"))
+  }
+
+  /** The build over every ATC anchor of both splits at once. Each stage
+    * from the prefix to the features works per anchor
+    * `(session_id, atc_ts)`, and the train and valid windows do not
+    * overlap, so one pass gives each split's rows; the split happens at
+    * the sink. The reference builds candidates and features once per
+    * split (`prepare_training_data_pyspark.py:629-630`).
+    */
+  private def anchorPass(
+      rawEvents: DataFrame,
+      rawProps: DataFrame,
+      covisSessionCap: Option[Int],
+      maxPrefixEvents: Option[Int],
+      bucketedEventsTable: Option[String],
+      stage: (String, DataFrame) => DataFrame): DataFrame = {
     // bucketedEventsTable: materialize the sessionized events bucketed
     // by session_id and run every downstream stage off that scan
     // (the 100 TB storage layout — see bucketizeEvents; identical
@@ -544,10 +567,8 @@ object RetailRocket {
       case None => graft.core.Caches.cache(sessionizeEvents(rawEvents))
     })
     val itemCat = stage("item_category", graft.core.Caches.cache(itemCategory(rawProps)))
-    val atc = graft.core.Caches.cache(atcEvents(events, itemCat))
-    val splits = Seq((TrainStart, TrainEnd), (TrainEnd, ValidEnd)).map { case (from, to) =>
-      stage("atc_split", graft.core.Caches.cache(splitByWindow(atc, from, to)))
-    }
+    val atc = stage("atc_split", graft.core.Caches.cache(
+      splitByWindow(atcEvents(events, itemCat), TrainStart, ValidEnd)))
 
     // split-independent matrices computed ONCE for both splits
     val tm = trainMatrices(events, itemCat, TrainEnd, covisSessionCap, cache = true)
@@ -562,21 +583,14 @@ object RetailRocket {
       "category_id")
     val vectors = stage("word2vec", Embeddings.trainWord2VecOrEmpty(seqs))
 
-    // ONE cached prefix⋈itemCat subtree per split, shared by the
-    // candidate pass (inner form, via the has_cat filter) and the
-    // feature pass (left form) — the J3 range join runs twice per
-    // buildAll instead of four times.
-    val prefixes = splits.map(s =>
-      graft.core.Caches.cache(prefixWithCategories(s, events, itemCat, maxPrefixEvents)))
-    val cands = splits.zip(prefixes).map { case (s, p) =>
-      stage("candidates", candidatesWith(s, events, itemCat, tm, maxPrefixEvents, Some(p)))
-    }
-    val Seq(train, valid) = splits.lazyZip(cands).lazyZip(prefixes).map { (s, c, p) =>
-      stage("features", Embeddings.attachEmbeddings(
-        featuresWith(s, c, events, itemCat, tm, maxPrefixEvents, Some(p)),
-        vectors, "category_id", dims = 16))
-    }
-    RunResult(train, valid)
+    // ONE cached prefix⋈itemCat subtree, shared by the candidate pass
+    // (inner form, via the has_cat filter) and the feature pass (left
+    // form) — the J3 range join runs once per build
+    val prefix = graft.core.Caches.cache(prefixWithCategories(atc, events, itemCat, maxPrefixEvents))
+    val cands = stage("candidates", candidatesWith(atc, events, itemCat, tm, maxPrefixEvents, Some(prefix)))
+    stage("features", Embeddings.attachEmbeddings(
+      featuresWith(atc, cands, events, itemCat, tm, maxPrefixEvents, Some(prefix)),
+      vectors, "category_id", dims = 16))
   }
 
   /** File-level entry point — the reference's CLI contract
@@ -605,32 +619,34 @@ object RetailRocket {
     // and counted — a long-lived session can run() repeatedly without
     // accumulating pinned InMemoryRelations
     graft.core.Caches.withScope {
-      val result = buildAll(
-        spark, readEventsCsv(spark, eventsCsv), readPropsCsv(spark, propsCsvs), covisSessionCap,
-        maxPrefixEvents, stage = stage)
-      // The counts come from one aggregate over each written file set,
-      // not from actions on the result frames: every action renders its
-      // plan, and these plans expand every nested cached relation of the
-      // build, which costs the driver far more than the count's jobs
-      // (DESIGN.md, "The RetailRocket build computes its shared subtrees
-      // once"). Read back with the known schema, which also holds for a
-      // split with no rows.
-      def written(df: DataFrame, name: String): (Long, Long) = {
-        val path = s"$outDir/X_${name}_spark.parquet"
-        // bounded row groups keep the matrices scan-parallel for the
-        // training jobs that read them (DESIGN.md, "Flagship save")
-        graft.core.Sinks.writeScanParallelParquet(df, path, maxRecordsPerFile = Some(50000L))
-        val r = spark.read.schema(df.schema).parquet(path)
-          .agg(count(lit(1)), count(when(col("y") === 1, true)))
-          .head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val (trainRows, trainPositive) = written(result.train, "train")
-      val (validRows, validPositive) = written(result.valid, "valid")
-      Map(
-        "train_rows" -> trainRows,
-        "valid_rows" -> validRows,
-        "train_positive" -> trainPositive,
-        "valid_positive" -> validPositive)
+      val all = anchorPass(readEventsCsv(spark, eventsCsv), readPropsCsv(spark, propsCsvs),
+        covisSessionCap, maxPrefixEvents, None, stage)
+      val tables = Seq("train", "valid").map(s => s -> s"X_${s}_spark.parquet")
+      // one write job for both matrices; bounded row groups keep them
+      // scan-parallel for the training jobs that read them (DESIGN.md,
+      // "Flagship save")
+      graft.core.Sinks.writeParquetByKey(all, splitOf, outDir, tables.toMap,
+        maxRecordsPerFile = Some(50000L))
+      // The counts come from one aggregate over the written files, not
+      // from actions on the built frame: every action renders its plan,
+      // and this plan expands every nested cached relation of the build,
+      // which costs the driver far more than the count's jobs (DESIGN.md,
+      // "The RetailRocket build computes its shared subtrees once"). Read
+      // back with the known schema; a split with no rows has no group
+      // and counts zero.
+      val counts = tables
+        .map { case (s, t) =>
+          spark.read.schema(all.schema).parquet(s"$outDir/$t").withColumn("split", lit(s))
+        }
+        .reduce(_ union _)
+        .groupBy(col("split"))
+        .agg(count(lit(1)), count(when(col("y") === 1, true)))
+        .collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+        .toMap
+      tables.flatMap { case (s, _) =>
+        val (rows, positive) = counts.getOrElse(s, (0L, 0L))
+        Seq(s"${s}_rows" -> rows, s"${s}_positive" -> positive)
+      }.toMap
     }
 }

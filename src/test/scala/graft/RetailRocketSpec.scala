@@ -214,17 +214,19 @@ class RetailRocketSpec extends SparkSpec {
     assert(direct("train_rows") > direct("train_positive"))
   }
 
+  // row count + order-independent sum of per-row hashes over the 22
+  // relational columns of both written matrices (the Word2Vec dims are
+  // not bit-reproducible)
+  private def digest(out: String): Seq[(Long, Long)] =
+    Seq("train", "valid").map { name =>
+      val df = spark.read.parquet(s"$out/X_${name}_spark.parquet")
+      val cols = df.columns.filterNot(_.startsWith("cat_emb_")).map(col).toIndexedSeq
+      val r = df.agg(count(lit(1)), coalesce(sum(pmod(xxhash64(cols: _*), lit(1000000007L))), lit(0L)))
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }
+
   test("run with a forcing stage hook reads back the same counts and relational-column digest as run without one") {
-    // row count + order-independent sum of per-row hashes over the 22
-    // relational columns (the Word2Vec dims are not bit-reproducible)
-    def digest(out: String): Seq[(Long, Long)] =
-      Seq("train", "valid").map { name =>
-        val df = spark.read.parquet(s"$out/X_${name}_spark.parquet")
-        val cols = df.columns.filterNot(_.startsWith("cat_emb_")).map(col).toIndexedSeq
-        val r = df.agg(count(lit(1)), coalesce(sum(pmod(xxhash64(cols: _*), lit(1000000007L))), lit(0L)))
-          .head()
-        (r.getLong(0), r.getLong(1))
-      }
     def build(stage: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame) = {
       val out = Files.createTempDirectory("rr-out").toString
       (RetailRocket.run(spark, s"$generatedDir/events", Seq(s"$generatedDir/props"), out, stage = stage),
@@ -235,8 +237,66 @@ class RetailRocketSpec extends SparkSpec {
     val plain = build((_, df) => df)
     assert(forced == plain)
     assert(plain._1("train_rows") > 0L && plain._1("valid_rows") > 0L)
-    assert(seen.toSeq == Seq("load_sessionize", "item_category", "atc_split", "atc_split",
-      "word2vec", "candidates", "candidates", "features", "features"))
+    assert(seen.toSeq == Seq("load_sessionize", "item_category", "atc_split",
+      "word2vec", "candidates", "features"))
+  }
+
+  test("run: one anchor pass writes the per-split build's counts and relational digest in fewer stages") {
+    import graft.core.{Caches, Sinks}
+    import graft.pipeline.Embeddings
+    // the per-split wiring from the same public functions: per split a
+    // cached prefix, candidates, features and a write, each split read
+    // back by its own aggregate
+    def perSplit(out: String): Map[String, Long] = Caches.withScope {
+      val events = Caches.cache(RetailRocket.sessionizeEvents(
+        RetailRocket.readEventsCsv(spark, s"$generatedDir/events")))
+      val itemCat = Caches.cache(RetailRocket.itemCategory(
+        RetailRocket.readPropsCsv(spark, Seq(s"$generatedDir/props"))))
+      val atc = Caches.cache(RetailRocket.atcEvents(events, itemCat))
+      val tm = RetailRocket.trainMatrices(events, itemCat, RetailRocket.TrainEnd, Some(1000), cache = true)
+      val vectors = Embeddings.trainWord2VecOrEmpty(Embeddings.sessionSequences(
+        events
+          .filter(col("ts") < lit(RetailRocket.TrainEnd).cast("timestamp"))
+          .join(broadcast(itemCat), Seq("item_id"))
+          .withColumn("epoch_s", unix_timestamp(col("ts")))
+          .withColumn("event_id", col("item_id")),
+        "category_id"))
+      Seq("train" -> (RetailRocket.TrainStart, RetailRocket.TrainEnd),
+        "valid" -> (RetailRocket.TrainEnd, RetailRocket.ValidEnd)).flatMap { case (name, (from, to)) =>
+        val split = Caches.cache(RetailRocket.splitByWindow(atc, from, to))
+        val prefix = Caches.cache(RetailRocket.prefixWithCategories(split, events, itemCat, None))
+        val cands = RetailRocket.candidatesWith(split, events, itemCat, tm, None, Some(prefix))
+        val df = Embeddings.attachEmbeddings(
+          RetailRocket.featuresWith(split, cands, events, itemCat, tm, None, Some(prefix)),
+          vectors, "category_id", dims = 16)
+        val path = s"$out/X_${name}_spark.parquet"
+        Sinks.writeScanParallelParquet(df, path, maxRecordsPerFile = Some(50000L))
+        val r = spark.read.schema(df.schema).parquet(path)
+          .agg(count(lit(1)), count(when(col("y") === 1, true))).head()
+        Seq(s"${name}_rows" -> r.getLong(0), s"${name}_positive" -> r.getLong(1))
+      }.toMap
+    }
+    val m = graft.core.StageMetrics.on(spark)
+    def stages[A](f: => A): (A, Int) = {
+      m.drain(); m.reset()
+      val a = f
+      m.drain()
+      (a, m.stages.size)
+    }
+    try {
+      val onePass = Files.createTempDirectory("rr-one").toString
+      val (counts, onePassStages) = stages(
+        RetailRocket.run(spark, s"$generatedDir/events", Seq(s"$generatedDir/props"), onePass))
+      val splitOut = Files.createTempDirectory("rr-split").toString
+      val (splitCounts, perSplitStages) = stages(perSplit(splitOut))
+      assert(counts == splitCounts)
+      assert(digest(onePass) == digest(splitOut))
+      assert(counts("train_rows") > 0L && counts("valid_rows") > 0L)
+      // fewer by a tenth at least: the order of the same per-split
+      // stages alone moves a build by a few stages (127 against 131)
+      assert(onePassStages * 10 < perSplitStages * 9,
+        s"one pass $onePassStages stages, per split $perSplitStages")
+    } finally m.close()
   }
 
   test("trainMatrices(cache = true): both covis matrices read one cached capped-events relation") {

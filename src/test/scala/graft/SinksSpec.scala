@@ -58,6 +58,52 @@ class SinksSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
   }
 
+  test("writeParquetByKey: one job writes every table, replaces an existing one, leaves no temporary directory") {
+    val dir = Files.createTempDirectory("sinks-bykey").toString
+    // an existing target with other rows and another schema is replaced
+    Sinks.writeParquet(spark.range(5L).toDF("old"), s"$dir/rest")
+    val df = spark.range(0L, 1000L, 1L, 2).select(col("id"), (col("id") % 3).as("m"))
+    val m = graft.core.StageMetrics.on(spark)
+    try {
+      m.drain(); m.reset()
+      Sinks.writeParquetByKey(df, when(col("m") === 0, "zero").otherwise("rest"), dir,
+        Map("zero" -> "zero", "rest" -> "rest"), maxRecordsPerFile = Some(100L))
+      m.drain()
+      // one write job over an exchange-free input is one stage
+      assert(m.stages.size == 1, s"stages: ${m.stages.map(_.name)}")
+    } finally m.close()
+    val zero = spark.read.parquet(s"$dir/zero")
+    val rest = spark.read.parquet(s"$dir/rest")
+    assert(zero.schema.map(f => (f.name, f.dataType)) == df.schema.map(f => (f.name, f.dataType)))
+    assert(rest.columns.toSeq == Seq("id", "m"))
+    assert(zero.count() == 334L && zero.filter(col("m") =!= 0).count() == 0L)
+    assert(rest.count() == 666L && rest.filter(col("m") === 0).count() == 0L)
+    // maxRecordsPerFile still bounds every file
+    assert(new java.io.File(s"$dir/rest").listFiles().count(_.getName.endsWith(".parquet")) >= 7)
+    assert(new java.io.File(s"$dir/rest/_SUCCESS").exists)
+    assert(new java.io.File(dir).list().toSet == Set("zero", "rest"))
+  }
+
+  test("writeParquetByKey: a table no row is keyed to reads back empty with the full schema") {
+    val dir = Files.createTempDirectory("sinks-bykey").toString
+    val df = spark.range(10L).select(col("id"), col("id").cast("string").as("s"))
+    Sinks.writeParquetByKey(df, lit("a"), dir, Map("a" -> "ta", "b" -> "tb"))
+    val tb = spark.read.parquet(s"$dir/tb")
+    assert(tb.count() == 0L)
+    assert(tb.schema.map(f => (f.name, f.dataType)) == df.schema.map(f => (f.name, f.dataType)))
+    assert(spark.read.parquet(s"$dir/ta").count() == 10L)
+    assert(new java.io.File(dir).list().toSet == Set("ta", "tb"))
+  }
+
+  test("writeParquetByKey: a key outside the tables fails loud and leaves no temporary directory") {
+    val dir = Files.createTempDirectory("sinks-bykey").toString
+    val df = spark.range(10L).toDF("id")
+    val e = intercept[IllegalArgumentException](
+      Sinks.writeParquetByKey(df, when(col("id") < 5, "a").otherwise("c"), dir, Map("a" -> "ta")))
+    assert(e.getMessage.contains("keyed outside"))
+    assert(new java.io.File(dir).list().isEmpty)
+  }
+
   test("dynamic partition overwrite replaces only the touched partitions") {
     // the incremental-reload contract at 100 TB: rewriting one day/split
     // must not wipe sibling partitions (static overwrite mode does)
