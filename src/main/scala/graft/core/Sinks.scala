@@ -90,15 +90,15 @@ object Sinks {
       key: Column,
       dir: String,
       tables: Map[String, String],
-      rowGroupBytes: Long = 8L * 1024 * 1024,
       maxRecordsPerFile: Option[Long] = None): Unit = {
     val spark = df.sparkSession
     val keyCol = "__table"
     val tmp = new Path(dir, s"_tmp_${java.util.UUID.randomUUID()}")
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      writeScanParallelParquet(df.withColumn(keyCol, key), tmp.toString, rowGroupBytes,
-        SaveMode.ErrorIfExists, maxRecordsPerFile, partitionByCols = Seq(keyCol))
+      writeScanParallelParquet(df.withColumn(keyCol, key), tmp.toString,
+        mode = SaveMode.ErrorIfExists, maxRecordsPerFile = maxRecordsPerFile,
+        partitionByCols = Seq(keyCol))
       val parts = fs.listStatus(tmp).filter(_.isDirectory).map(_.getPath.getName).toSet
       val unknown = parts -- tables.keys.map(ExternalCatalogUtils.getPartitionPathString(keyCol, _))
       require(unknown.isEmpty, s"writeParquetByKey: rows keyed outside $tables: $unknown")
@@ -108,7 +108,7 @@ object Sinks {
         fs.delete(target, true)
         if (!fs.exists(part))
           writeScanParallelParquet(spark.createDataFrame(java.util.List.of[Row](), df.schema),
-            target.toString, rowGroupBytes, SaveMode.ErrorIfExists)
+            target.toString, mode = SaveMode.ErrorIfExists)
         else if (fs.rename(part, target)) fs.create(new Path(target, "_SUCCESS")).close()
         else throw new java.io.IOException(s"writeParquetByKey: cannot move $part to $target")
       }

@@ -529,6 +529,12 @@ object RetailRocket {
     * label a stage there (BaselineBench forces each with
     * `Caches.materialized`); the default identity leaves every plan as
     * it is.
+    *
+    * The two views are uncached filters over the one frame, so an action
+    * on each runs the both-split candidate and feature joins once per
+    * view; a caller that acts on both should cache or force the frame
+    * through the `features` hook. [[run]] does not pay this: it writes
+    * the frame once and splits it at the sink.
     */
   def buildAll(
       spark: SparkSession,
