@@ -39,8 +39,12 @@ object BaselineBench {
     val nCats = 1000L
     val winStartMs = 1430438400000L // 2015-05-01
     val winMs = 92L * 86400 * 1000 // through 2015-08-01
+    // rand(seed) draws per slice, so the slice count is pinned: the data
+    // (and the counts ROADMAP and DESIGN.md quote) are the same at any
+    // SPARK_GRAFT_CPUS
+    val slices = 32
 
-    val ev = spark.range(nEvents)
+    val ev = spark.range(0L, nEvents, 1L, slices)
       .select(
         (lit(winStartMs) + (pow(rand(1), 1.15) * winMs).cast("long")).as("timestamp"),
         (pow(rand(2), 2.0) * nUsers).cast("long").as("visitorid"),
@@ -54,7 +58,7 @@ object BaselineBench {
 
     // ~420K items carry categoryid (plus superseded snapshots and
     // non-category properties, exercising latest-wins + filtering)
-    val props = spark.range(nItems * 2)
+    val props = spark.range(0L, nItems * 2, 1L, slices)
       .select(
         (lit(winStartMs) - 86400000L + (col("id") % 7) * 3600000L).as("timestamp"),
         (col("id") % nItems).as("itemid"),

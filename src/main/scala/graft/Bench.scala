@@ -216,46 +216,26 @@ object Bench {
       f"""{"queries":$qs,"shuffle_mb":$sh,""" +
         f""""metric":"total","value":$total%.3f,"unit":"sec",""" +
         f""""failed":$failed,"shuffle_mb_total":$totalSh%.1f,"sf":"$sfDir"}""")
-    // The driver's artifact keeps only a ~4 KB stdout TAIL, so the big
-    // per-query line loses its head at ~200+ queries (BENCH_r08 retained
-    // 76/243). Emit the cost HEAD — the top-25 most expensive queries by
-    // seconds and by shuffle — as their own compact lines so the
-    // expensive cohort always survives truncation.
-    // Plan fingerprints: the full per-query dict first (may truncate in
-    // the driver's stdout-tail capture), then the top-25-by-seconds
-    // subset on its own compact line so the expensive cohort's
-    // fingerprints always survive — they are what separates contention
-    // from regression when the head moves.
+    // Plan fingerprints: the full per-query dict (may truncate in the
+    // stdout-tail capture; the compact top-10 lines below always
+    // survive) — they are what separates contention from regression
+    // when the head moves.
     val fps = results.map { case (k, _, _, fp, _) => s"\"" + k + "\":\"" + fp + "\"" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"plan_fingerprints","queries":$fps}""")
     val mts = results.map { case (k, _, _, _, m) => s"\"" + k + "\":" + f"$m%.2f" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"max_task_s","queries":$mts}""")
-    val top25 = results.filter(_._2 >= 0).sortBy(-_._2).take(25)
-      .map { case (k, v, _, _, _) => s"\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val top25Sh = results.sortBy(-_._3).take(25)
-      .map { case (k, _, mb, _, _) => s"\"" + k + "\":" + f"$mb%.1f" }
-      .mkString("{", ",", "}")
-    val top25Fp = results.filter(_._2 >= 0).sortBy(-_._2).take(25)
-      .map { case (k, _, _, fp, _) => s"\"" + k + "\":\"" + fp + "\"" }
-      .mkString("{", ",", "}")
     // skew head: the 25 largest max_task/wall ratios among non-trivial
     // queries (wall ≥ 1 s) — the one-hot-partition cohort, directly
     val top25Skew = results.filter(r => r._2 >= 1.0).sortBy(r => -(r._5 / r._2)).take(25)
       .map { case (k, v, _, _, m) => s"\"" + k + "\":" + f"${m / v}%.2f" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"top25_sec","queries":$top25}""")
-    println(s"""{"metric":"top25_shuffle_mb","queries":$top25Sh}""")
-    println(s"""{"metric":"top25_fingerprints","queries":$top25Fp}""")
     println(s"""{"metric":"top25_max_task_frac","queries":$top25Skew}""")
-    // The driver's artifact keeps only the LAST ~2.4 KB of stdout: four
-    // ~900 B top-25 lines overflow it and the SECONDS head — the one
-    // list that ranks regressions — was the casualty in BENCH_r14
-    // (everything costlier than q24 lost). Compact top-10 re-emits of
-    // the three decision-critical metrics go LAST (least→most important)
-    // so a 2.4 KB tail always retains the full cost head + total.
+    // A stdout-tail capture keeps only the last ~2 KB, so compact
+    // top-10 re-emits of the three decision-critical metrics go LAST
+    // (least→most important) and the tail always retains the full cost
+    // head + total.
     def topN(n: Int, rs: Seq[(String, Double, Double, String, Double)],
         by: ((String, Double, Double, String, Double)) => Double,
         render: ((String, Double, Double, String, Double)) => String): String =

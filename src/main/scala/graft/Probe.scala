@@ -266,11 +266,11 @@ object Probe {
     // otherwise land as one file with default 128 MB groups —
     // single-task for every scan, understating the cohort's map-side
     // parallelism at exactly the scale the probe exists to show
-    Sinks.writeScanParallelParquet(
+    Sinks.writeParquet(
       replicate(base, r).select(
         (col("l_orderkey") + col("__r") * keySpan).as("l_orderkey") +:
           base.columns.filterNot(_ == "l_orderkey").map(col): _*),
-      s"$out/lineitem.parquet")
+      s"$out/lineitem.parquet", rowGroupBytes = Some(Sinks.ScanParallelRowGroupBytes))
     val n = spark.read.parquet(s"$out/lineitem.parquet").count()
     println(s"[scale] lineitem x$r = $n rows at $out")
 
@@ -435,7 +435,7 @@ object Probe {
     * bootstrap) runs single-task locally REGARDLESS of
     * `maxPartitionBytes`, and `max_task_frac ≈ 1` on those queries is
     * input layout, not plan skew. Rewrites the heavy tables with bounded
-    * row groups ([[graft.core.Sinks.writeScanParallelParquet]]),
+    * row groups (`rowGroupBytes` of [[graft.core.Sinks.writeParquet]]),
     * symlinks the rest, and times the cohort on both layouts. Expected:
     * identical plan fingerprints (paths are normalized out), wall drops
     * roughly by the core multiple, max_task_frac < 0.5.
@@ -463,10 +463,10 @@ object Probe {
     rewrite.foreach { t =>
       // coalesce(1): keep ONE file so the measured difference is purely
       // row-group count, not file count
-      Sinks.writeScanParallelParquet(
+      Sinks.writeParquet(
         spark.read.parquet(s"$src/$t.parquet").coalesce(1),
         s"$out/$t.parquet",
-        rowGroupBytes = 1L * 1024 * 1024)
+        rowGroupBytes = Some(1L * 1024 * 1024))
       println(s"[rg] rewrote $t")
     }
     link.foreach { t =>

@@ -28,51 +28,44 @@ object Sinks {
     rows
   }
 
-  def writeParquet(
-      df: DataFrame,
-      path: String,
-      maxRecordsPerFile: Option[Long] = None,
-      partitionByCols: Seq[String] = Nil,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    var w = df.write.mode(mode).option("compression", "snappy")
-    maxRecordsPerFile.foreach(n => w = w.option("maxRecordsPerFile", n.toString))
-    if (partitionByCols.nonEmpty) w = w.partitionBy(partitionByCols: _*)
-    w.parquet(path)
-  }
-
-  /** Scan-parallel write: bounds parquet ROW GROUPS
-    * (`parquet.block.size`), not just files. Row groups are the atomic
-    * split unit of a parquet file — a table written as ONE file with
-    * ONE row group is single-task for every scan no matter how small
+  /** The one snappy parquet writer; every layout below ends here.
+    *
+    * `rowGroupBytes` bounds parquet ROW GROUPS (`parquet.block.size`),
+    * not just files. Row groups are the atomic split unit of a parquet
+    * file — a table written as ONE file with ONE row group is
+    * single-task for every scan no matter how small
     * `spark.sql.files.maxPartitionBytes` is (the r13 finding on the
     * sf* fixtures: every scan-rate kernel pipeline ran one-task
     * locally by input layout). Bounding the group size makes file
     * splits real, so CPU-heavy per-row kernels (CDC chunking,
     * substring fingerprints) parallelize across cores even on a
     * single-file table. At 100 TB the default 128 MB group (HDFS block
-    * alignment) is right for multi-file tables; this knob is for
-    * engine-DERIVED tables and fixtures where group-granular
-    * parallelism beats marginal compression.
+    * alignment) is right for multi-file tables; set it
+    * ([[ScanParallelRowGroupBytes]]) for engine-DERIVED tables and
+    * fixtures where group-granular parallelism beats marginal
+    * compression.
     */
-  def writeScanParallelParquet(
+  def writeParquet(
       df: DataFrame,
       path: String,
-      rowGroupBytes: Long = 8L * 1024 * 1024,
-      mode: SaveMode = SaveMode.Overwrite,
       maxRecordsPerFile: Option[Long] = None,
-      partitionByCols: Seq[String] = Nil): Unit = {
-    var w = df.write.mode(mode)
-      .option("compression", "snappy")
-      .option("parquet.block.size", rowGroupBytes.toString)
+      partitionByCols: Seq[String] = Nil,
+      mode: SaveMode = SaveMode.Overwrite,
+      rowGroupBytes: Option[Long] = None): Unit = {
+    var w = df.write.mode(mode).option("compression", "snappy")
+    rowGroupBytes.foreach(n => w = w.option("parquet.block.size", n.toString))
     maxRecordsPerFile.foreach(n => w = w.option("maxRecordsPerFile", n.toString))
     if (partitionByCols.nonEmpty) w = w.partitionBy(partitionByCols: _*)
     w.parquet(path)
   }
 
+  /** Row-group size for scan-parallel engine-derived tables. */
+  val ScanParallelRowGroupBytes: Long = 8L * 1024 * 1024
+
   /** One write job for several tables: each row of `df` goes to the
-    * table `tables` names for its `key` value, at `dir/<name>`, in the
-    * files [[writeScanParallelParquet]] writes (snappy, bounded row
-    * groups, `maxRecordsPerFile`). The job writes partitioned on `key`
+    * table `tables` names for its `key` value, at `dir/<name>`, as
+    * [[writeParquet]] files with [[ScanParallelRowGroupBytes]] row
+    * groups and `maxRecordsPerFile`. The job writes partitioned on `key`
     * into a temporary directory under `dir`, then renames each
     * partition directory to its table, replacing what is there, and
     * marks it `_SUCCESS` like a direct write. A table no row is keyed
@@ -96,9 +89,8 @@ object Sinks {
     val tmp = new Path(dir, s"_tmp_${java.util.UUID.randomUUID()}")
     val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      writeScanParallelParquet(df.withColumn(keyCol, key), tmp.toString,
-        mode = SaveMode.ErrorIfExists, maxRecordsPerFile = maxRecordsPerFile,
-        partitionByCols = Seq(keyCol))
+      writeParquet(df.withColumn(keyCol, key), tmp.toString, maxRecordsPerFile, Seq(keyCol),
+        SaveMode.ErrorIfExists, Some(ScanParallelRowGroupBytes))
       val parts = fs.listStatus(tmp).filter(_.isDirectory).map(_.getPath.getName).toSet
       val unknown = parts -- tables.keys.map(ExternalCatalogUtils.getPartitionPathString(keyCol, _))
       require(unknown.isEmpty, s"writeParquetByKey: rows keyed outside $tables: $unknown")
@@ -107,8 +99,8 @@ object Sinks {
         val target = new Path(dir, name)
         fs.delete(target, true)
         if (!fs.exists(part))
-          writeScanParallelParquet(spark.createDataFrame(java.util.List.of[Row](), df.schema),
-            target.toString, mode = SaveMode.ErrorIfExists)
+          writeParquet(spark.createDataFrame(java.util.List.of[Row](), df.schema), target.toString,
+            mode = SaveMode.ErrorIfExists)
         else if (fs.rename(part, target)) fs.create(new Path(target, "_SUCCESS")).close()
         else throw new java.io.IOException(s"writeParquetByKey: cannot move $part to $target")
       }
@@ -134,10 +126,8 @@ object Sinks {
       numFiles: Int,
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     val cols = clusterCols.map(df.col)
-    df.repartitionByRange(numFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode(mode).option("compression", "snappy")
-      .parquet(path)
+    writeParquet(df.repartitionByRange(numFiles, cols: _*).sortWithinPartitions(cols: _*),
+      path, mode = mode)
   }
 
   /** Z-order clustered write: range-cluster on the Morton interleave
@@ -159,12 +149,12 @@ object Sinks {
       mode: SaveMode = SaveMode.Overwrite): Unit = {
     val z = org.apache.spark.sql.graft.ZOrder2(
       df.col(xCol).cast("long"), df.col(yCol).cast("long"), bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, org.apache.spark.sql.functions.col("__z"))
-      .sortWithinPartitions(org.apache.spark.sql.functions.col("__z"))
-      .drop("__z")
-      .write.mode(mode).option("compression", "snappy")
-      .parquet(path)
+    writeParquet(
+      df.withColumn("__z", z)
+        .repartitionByRange(numFiles, org.apache.spark.sql.functions.col("__z"))
+        .sortWithinPartitions(org.apache.spark.sql.functions.col("__z"))
+        .drop("__z"),
+      path, mode = mode)
   }
 
   /** JSON-lines sink/scan — the interchange format training-data

@@ -20,6 +20,11 @@ import org.apache.spark.sql.functions._
   */
 object Embeddings {
 
+  /** Word2Vec's vocabulary threshold: the fit drops rarer tokens, and
+    * [[trainWord2VecOrEmpty]] checks the corpus against the same one.
+    */
+  val MinCount = 3
+
   /** Per-session item/category token sequences, time-ordered.
     * Input must have (session_id, epoch_s, event_id, tokenCol).
     */
@@ -39,7 +44,7 @@ object Embeddings {
       sequences: DataFrame,
       vectorSize: Int = 16,
       windowSize: Int = 5,
-      minCount: Int = 3,
+      minCount: Int = MinCount,
       maxIter: Int = 10,
       seed: Long = 42L): DataFrame = {
     val w2v = new Word2Vec()
@@ -53,9 +58,10 @@ object Embeddings {
     w2v.fit(sequences).getVectors
   }
 
-  /** [[trainWord2Vec]], but an empty/under-minCount corpus yields an
-    * empty vectors table instead of MLlib's IllegalArgumentException —
-    * downstream attach then zero-fills every dim (out-of-vocab path).
+  /** [[trainWord2Vec]] with its defaults, but an empty/under-[[MinCount]]
+    * corpus yields an empty vectors table instead of MLlib's
+    * IllegalArgumentException — downstream attach then zero-fills every
+    * dim (out-of-vocab path).
     *
     * The vocabulary check and the fit both read `sequences`, whose plan
     * typically ends in a per-session exchange: the corpus is cached for
@@ -63,21 +69,15 @@ object Embeddings {
     * reads the corpus (the fitted vectors are a local relation), so the
     * scope drops the cache on return.
     */
-  def trainWord2VecOrEmpty(
-      sequences: DataFrame,
-      vectorSize: Int = 16,
-      windowSize: Int = 5,
-      minCount: Int = 3,
-      maxIter: Int = 10,
-      seed: Long = 42L): DataFrame = graft.core.Caches.withScope {
+  def trainWord2VecOrEmpty(sequences: DataFrame): DataFrame = graft.core.Caches.withScope {
     val spark = sequences.sparkSession
     val corpus = graft.core.Caches.cache(sequences)
     val hasVocab = corpus
       .select(explode(col("seq")).as("w"))
       .groupBy(col("w")).count()
-      .filter(col("count") >= minCount)
+      .filter(col("count") >= MinCount)
       .limit(1).count() > 0
-    if (hasVocab) trainWord2Vec(corpus, vectorSize, windowSize, minCount, maxIter, seed)
+    if (hasVocab) trainWord2Vec(corpus)
     else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -49,15 +49,12 @@ object RetailRocket {
 
   private def msToTs(c: Column): Column = timestamp_seconds(c / 1000L)
 
-  /** Load + window-filter + sessionize raw events (reference STEP 2,
-    * `:68-137`). Accepts any DataFrame in events.csv schema (use
-    * [[readEventsCsv]] for files). Output: (session_id, user_id, ts,
-    * item_id, event).
+  /** Load + window-filter (`[TrainStart, ValidEnd)`) + sessionize raw
+    * events (reference STEP 2, `:68-137`). Accepts any DataFrame in
+    * events.csv schema (use [[readEventsCsv]] for files). Output:
+    * (session_id, user_id, ts, item_id, event).
     */
-  def sessionizeEvents(
-      raw: DataFrame,
-      windowStart: String = TrainStart,
-      windowEnd: String = ValidEnd): DataFrame = {
+  def sessionizeEvents(raw: DataFrame): DataFrame = {
     val filtered = raw
       .select(
         msToTs(col("timestamp")).as("ts"),
@@ -65,8 +62,8 @@ object RetailRocket {
         col("itemid").cast("long").as("item_id"),
         col("event"))
       .filter(
-        col("ts") >= lit(windowStart).cast("timestamp") &&
-          col("ts") < lit(windowEnd).cast("timestamp"))
+        col("ts") >= lit(TrainStart).cast("timestamp") &&
+          col("ts") < lit(ValidEnd).cast("timestamp"))
     // Deterministic intra-ties ordering: reference orders by ts only
     // (unstable under ties); we add (item_id, event) — documented
     // deviation, same sessions whenever ts ties don't straddle a gap.
@@ -90,21 +87,13 @@ object RetailRocket {
         col("event"))
   }
 
-  /** CSV scan (reference STEP 1/3, `prepare_training_data_pyspark.py:71,149`).
-    *
-    * `inferSchema = false` (default) uses the explicit [[eventsCsvSchema]]:
-    * inference is a SECOND full pass over the file — at 100 TB that is a
-    * doubled scan for types that are already known. `inferSchema = true`
-    * is the literal reference behavior (`inferSchema=True`), kept as a
-    * passthrough for schema-unknown exploration.
+  /** CSV scan (reference STEP 1/3, `prepare_training_data_pyspark.py:71,149`)
+    * with the explicit [[eventsCsvSchema]]: the reference's
+    * `inferSchema=True` is a SECOND full pass over the file — at 100 TB
+    * a doubled scan for types that are already known.
     */
-  def readEventsCsv(
-      spark: SparkSession,
-      path: String,
-      inferSchema: Boolean = false): DataFrame =
-    if (inferSchema)
-      spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-    else spark.read.option("header", "true").schema(eventsCsvSchema).csv(path)
+  def readEventsCsv(spark: SparkSession, path: String): DataFrame =
+    spark.read.option("header", "true").schema(eventsCsvSchema).csv(path)
 
   /** One-time bucketed materialization of the sessionized events table
     * — the storage-level answer to the session-key shuffles. Written
@@ -120,7 +109,10 @@ object RetailRocket {
     * At 100 TB this is the difference between shuffling the event log
     * once at ingest (write-side, amortized over every later query) and
     * shuffling it in every pipeline run. Pair `buckets` with the
-    * cluster's target partition size (~128 MB/bucket-file).
+    * cluster's target partition size (~128 MB/bucket-file). [[buildAll]]
+    * does not use it: on one node the bucketed build measured slower
+    * (DESIGN.md "Partitioning strategy"); BucketingSpec pins its rows
+    * and its exchange-free joins.
     */
   def bucketizeEvents(
       events: DataFrame,
@@ -136,21 +128,12 @@ object RetailRocket {
     spark.table(tableName)
   }
 
-  /** Same explicit-schema-by-default / `inferSchema` passthrough trade
-    * as [[readEventsCsv]] (reference reads the property parts with
-    * `inferSchema=True`, `:149-150`).
+  /** The property parts as one scan with the explicit [[propsCsvSchema]]
+    * (the reference reads each part with `inferSchema=True` and unions
+    * them, `:149-150`).
     */
-  def readPropsCsv(
-      spark: SparkSession,
-      paths: Seq[String],
-      inferSchema: Boolean = false): DataFrame =
-    paths
-      .map { p =>
-        if (inferSchema)
-          spark.read.option("header", "true").option("inferSchema", "true").csv(p)
-        else spark.read.option("header", "true").schema(propsCsvSchema).csv(p)
-      }
-      .reduce(_ union _)
+  def readPropsCsv(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.option("header", "true").schema(propsCsvSchema).csv(paths: _*)
 
   /** Latest `categoryid` per item (reference STEP 3, `:144-173`):
     * union parts → filter property → row_number over ts desc.
@@ -185,8 +168,17 @@ object RetailRocket {
       col("atc_ts") >= lit(start).cast("timestamp") &&
         col("atc_ts") < lit(end).cast("timestamp"))
 
-  /** Session-prefix rows for a set of anchors: all events strictly
-    * before the anchor within its session (J3 range-join shape).
+  /** The shared J3 subtree: for each anchor, the events strictly
+    * before it within its session (range-join shape), LEFT-joined to
+    * item categories; consumed by BOTH [[candidatesWith]] (inner form)
+    * and [[featuresWith]] (left form). `has_cat = 1` marks rows whose
+    * item has a category row, so the inner form is a FILTER over this
+    * one lineage instead of a second join — the CacheManager can then
+    * dedup both consumers against one cached build instead of running
+    * the most expensive shuffle in the pipeline twice. (A plain
+    * `category_id IS NOT NULL` filter would be wrong if an item's
+    * latest category value is null — the marker keeps inner-join
+    * semantics exactly.)
     *
     * `maxPrefixEvents`: keep only the N most recent prefix events per
     * anchor (recency-ranked, deterministic tie-break). The prefix
@@ -196,16 +188,17 @@ object RetailRocket {
     * 54 s at 10M events → 385 s at 20M on one node). A recency cap
     * bounds it at anchors × N; None = reference-exact.
     */
-  private def prefixEvents(
+  def prefixWithCategories(
       atc: DataFrame,
       events: DataFrame,
+      itemCat: DataFrame,
       maxPrefixEvents: Option[Int] = None): DataFrame = {
     val all = atc
       .select(col("session_id"), col("atc_ts"))
       .distinct()
       .join(events.select(col("session_id"), col("ts"), col("item_id")), Seq("session_id"))
       .filter(col("ts") < col("atc_ts"))
-    maxPrefixEvents match {
+    val prefix = maxPrefixEvents match {
       case Some(k) =>
         Windows
           .topKPerGroup(all, Seq("session_id", "atc_ts"),
@@ -213,26 +206,8 @@ object RetailRocket {
           .drop("rn")
       case None => all
     }
+    prefix.join(broadcast(itemCat.withColumn("has_cat", lit(1))), Seq("item_id"), "left")
   }
-
-  /** The shared J3 subtree: session-prefix events LEFT-joined to item
-    * categories, consumed by BOTH [[candidatesWith]] (inner form) and
-    * [[featuresWith]] (left form). `has_cat = 1` marks rows whose item
-    * has a category row, so the inner form is a FILTER over this one
-    * lineage instead of a second join — the CacheManager can then dedup
-    * both consumers against one cached build instead of running the
-    * most expensive shuffle in the pipeline twice. (A plain
-    * `category_id IS NOT NULL` filter would be wrong if an item's
-    * latest category value is null — the marker keeps inner-join
-    * semantics exactly.)
-    */
-  def prefixWithCategories(
-      atc: DataFrame,
-      events: DataFrame,
-      itemCat: DataFrame,
-      maxPrefixEvents: Option[Int] = None): DataFrame =
-    prefixEvents(atc, events, maxPrefixEvents)
-      .join(broadcast(itemCat.withColumn("has_cat", lit(1))), Seq("item_id"), "left")
 
   /** Split-independent matrices read by the candidate and feature
     * passes of both splits — everything here depends only on
@@ -341,6 +316,7 @@ object RetailRocket {
     * `sharedPrefix`: a (typically cached) [[prefixWithCategories]]
     * table for these `atc` anchors — pass the same one to
     * [[featuresWith]] so the prefix range-join subtree is computed once.
+    * None builds and caches one here.
     */
   def candidatesWith(
       atc: DataFrame,
@@ -349,13 +325,9 @@ object RetailRocket {
       tm: TrainMatrices,
       maxPrefixEvents: Option[Int] = None,
       sharedPrefix: Option[DataFrame] = None): DataFrame = {
-    val prefix = sharedPrefix match {
-      case Some(p) => p.filter(col("has_cat") === 1).drop("has_cat")
-      case None =>
-        graft.core.Caches.cache(
-          prefixEvents(atc, events, maxPrefixEvents)
-            .join(broadcast(itemCat), Seq("item_id")))
-    }
+    val prefix = sharedPrefix
+      .getOrElse(graft.core.Caches.cache(prefixWithCategories(atc, events, itemCat, maxPrefixEvents)))
+      .filter(col("has_cat") === 1).drop("has_cat")
 
     // 1. prefix categories (`:235-246`)
     val prefixCands = prefix.select("session_id", "atc_ts", "category_id").distinct()
@@ -424,12 +396,9 @@ object RetailRocket {
 
     // prefix stats per (anchor, candidate category) — left join so
     // anchors with empty prefixes keep a row (`:466-496`)
-    val pe = sharedPrefix match {
-      case Some(p) => p.drop("has_cat")
-      case None =>
-        prefixEvents(atc, events, maxPrefixEvents)
-          .join(broadcast(itemCat), Seq("item_id"), "left")
-    }
+    val pe = sharedPrefix
+      .getOrElse(graft.core.Caches.cache(prefixWithCategories(atc, events, itemCat, maxPrefixEvents)))
+      .drop("has_cat")
     // Prefix stats split by their TRUE grain instead of one
     // candidate-grain multi-distinct agg. The reference (`:466-496`)
     // aggregates the candidate-multiplied prefix join with two
@@ -540,12 +509,9 @@ object RetailRocket {
       spark: SparkSession,
       rawEvents: DataFrame,
       rawProps: DataFrame,
-      covisSessionCap: Option[Int] = Some(1000),
       maxPrefixEvents: Option[Int] = None,
-      bucketedEventsTable: Option[String] = None,
       stage: (String, DataFrame) => DataFrame = (_, df) => df): RunResult = {
-    val all = anchorPass(rawEvents, rawProps, covisSessionCap, maxPrefixEvents,
-      bucketedEventsTable, stage)
+    val all = anchorPass(rawEvents, rawProps, maxPrefixEvents, stage)
     RunResult(all.filter(splitOf === "train"), all.filter(splitOf === "valid"))
   }
 
@@ -559,25 +525,15 @@ object RetailRocket {
   private def anchorPass(
       rawEvents: DataFrame,
       rawProps: DataFrame,
-      covisSessionCap: Option[Int],
       maxPrefixEvents: Option[Int],
-      bucketedEventsTable: Option[String],
       stage: (String, DataFrame) => DataFrame): DataFrame = {
-    // bucketedEventsTable: materialize the sessionized events bucketed
-    // by session_id and run every downstream stage off that scan
-    // (the 100 TB storage layout — see bucketizeEvents; identical
-    // results, RetailRocketSpec pins the equivalence). None = in-memory
-    // cache of the sessionize lineage (single-job default).
-    val events = stage("load_sessionize", bucketedEventsTable match {
-      case Some(t) => bucketizeEvents(sessionizeEvents(rawEvents), t)
-      case None => graft.core.Caches.cache(sessionizeEvents(rawEvents))
-    })
+    val events = stage("load_sessionize", graft.core.Caches.cache(sessionizeEvents(rawEvents)))
     val itemCat = stage("item_category", graft.core.Caches.cache(itemCategory(rawProps)))
     val atc = stage("atc_split", graft.core.Caches.cache(
       splitByWindow(atcEvents(events, itemCat), TrainStart, ValidEnd)))
 
     // split-independent matrices computed ONCE for both splits
-    val tm = trainMatrices(events, itemCat, TrainEnd, covisSessionCap, cache = true)
+    val tm = trainMatrices(events, itemCat, TrainEnd)
 
     // Word2Vec category embeddings on pre-cutoff sequences (`:390-433`)
     val seqs = Embeddings.sessionSequences(
@@ -618,7 +574,6 @@ object RetailRocket {
       eventsCsv: String,
       propsCsvs: Seq[String],
       outDir: String,
-      covisSessionCap: Option[Int] = Some(1000),
       maxPrefixEvents: Option[Int] = None,
       stage: (String, DataFrame) => DataFrame = (_, df) => df): Map[String, Long] =
     // every intra-build cache is dropped once the matrices are written
@@ -626,7 +581,7 @@ object RetailRocket {
     // accumulating pinned InMemoryRelations
     graft.core.Caches.withScope {
       val all = anchorPass(readEventsCsv(spark, eventsCsv), readPropsCsv(spark, propsCsvs),
-        covisSessionCap, maxPrefixEvents, None, stage)
+        maxPrefixEvents, stage)
       val tables = Seq("train", "valid").map(s => s -> s"X_${s}_spark.parquet")
       // one write job for both matrices; bounded row groups keep them
       // scan-parallel for the training jobs that read them (DESIGN.md,

@@ -80,6 +80,30 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
+  test("bucketizeEvents keeps the rows of sessionizeEvents") {
+    import spark.implicits._
+    import graft.pipeline.RetailRocket
+    val may1 = 1430438400000L
+    // 3 users, 15 min between a user's events, then a 2 h break: two
+    // sessions each
+    val raw = (0 until 60).map { i =>
+      (may1 + i * 300000L + (if (i >= 30) 7200000L else 0L), (i % 3).toLong,
+        if (i % 9 == 0) "addtocart" else "view", (100 + i % 11).toLong,
+        null.asInstanceOf[java.lang.Long])
+    }.toDF("timestamp", "visitorid", "event", "itemid", "transactionid")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("session_id", "user_id", "ts", "item_id", "event")
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    try {
+      val events = RetailRocket.sessionizeEvents(raw)
+      val bucketed = RetailRocket.bucketizeEvents(events, "graft_test_events_bucketed3", buckets = 4)
+      assert(sorted(bucketed) == sorted(events))
+      assert(events.select("session_id").distinct().count() == 6)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_test_events_bucketed3")
+    }
+  }
+
   test("pipeline J4 covis distinct+self-join over bucketizeEvents plans zero exchanges") {
     import spark.implicits._
     import graft.pipeline.RetailRocket

@@ -63,18 +63,6 @@ class RetailRocketSpec extends SparkSpec {
     assert(sessions == Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
   }
 
-  test("inferSchema passthrough: same rows and compatible types as the explicit schema") {
-    val inferred = RetailRocket.readEventsCsv(spark, s"$fixtureDir/events.csv", inferSchema = true)
-    assert(inferred.count() == rawEvents.count())
-    // downstream contract holds regardless of which reader fed it
-    val s1 = RetailRocket.sessionizeEvents(inferred).orderBy("session_id", "ts", "item_id")
-    val s2 = RetailRocket.sessionizeEvents(rawEvents).orderBy("session_id", "ts", "item_id")
-    assert(s1.collect().toSeq == s2.collect().toSeq)
-    val props = RetailRocket.readPropsCsv(
-      spark, Seq(s"$fixtureDir/item_properties_part1.csv"), inferSchema = true)
-    assert(props.count() > 0)
-  }
-
   test("item category: latest snapshot wins across csv parts") {
     val cats = RetailRocket.itemCategory(rawProps)
       .as[(Long, Long)].collect().toMap
@@ -270,7 +258,8 @@ class RetailRocketSpec extends SparkSpec {
           RetailRocket.featuresWith(split, cands, events, itemCat, tm, None, Some(prefix)),
           vectors, "category_id", dims = 16)
         val path = s"$out/X_${name}_spark.parquet"
-        Sinks.writeScanParallelParquet(df, path, maxRecordsPerFile = Some(50000L))
+        Sinks.writeParquet(df, path, maxRecordsPerFile = Some(50000L),
+          rowGroupBytes = Some(Sinks.ScanParallelRowGroupBytes))
         val r = spark.read.schema(df.schema).parquet(path)
           .agg(count(lit(1)), count(when(col("y") === 1, true))).head()
         Seq(s"${name}_rows" -> r.getLong(0), s"${name}_positive" -> r.getLong(1))
@@ -353,20 +342,29 @@ class RetailRocketSpec extends SparkSpec {
     assert(embSum == 0.0)
   }
 
-  test("buildAll over a bucketed events table produces identical matrices") {
-    try {
-      val bucketed = RetailRocket.buildAll(
-        spark, rawEvents, rawProps,
-        bucketedEventsTable = Some("graft_rr_spec_bucketed"))
-      // full-width check: every one of the 38 columns agrees on both splits
-      def rows(df: org.apache.spark.sql.DataFrame) = {
-        val cols = df.columns.sorted
-        df.select(cols.map(col): _*).collect().map(_.toSeq).sortBy(_.toString).toSeq
+  test("candidatesWith/featuresWith: sharedPrefix = None gives the rows of a shared prefixWithCategories") {
+    import graft.core.Caches
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    Caches.withScope {
+      val events = Caches.cache(RetailRocket.sessionizeEvents(
+        RetailRocket.readEventsCsv(spark, s"$generatedDir/events")))
+      // every 7th item uncategorized, so prefixes hold rows the inner
+      // (candidates) and left (features) forms treat differently
+      val itemCat = Caches.cache(RetailRocket.itemCategory(
+        RetailRocket.readPropsCsv(spark, Seq(s"$generatedDir/props"))).filter(col("item_id") % 7 =!= 0))
+      val atc = Caches.cache(RetailRocket.atcEvents(events, itemCat))
+      val tm = RetailRocket.trainMatrices(events, itemCat, RetailRocket.TrainEnd)
+      Seq(None, Some(2)).foreach { cap =>
+        // the shared side first: the default caches the same plan, which
+        // the shared side would then read
+        val shared = Some(RetailRocket.prefixWithCategories(atc, events, itemCat, cap))
+        val cands = RetailRocket.candidatesWith(atc, events, itemCat, tm, cap, shared)
+        val candRows = sorted(cands)
+        val featRows = sorted(RetailRocket.featuresWith(atc, cands, events, itemCat, tm, cap, shared))
+        assert(sorted(RetailRocket.candidatesWith(atc, events, itemCat, tm, cap)) == candRows)
+        assert(sorted(RetailRocket.featuresWith(atc, cands, events, itemCat, tm, cap)) == featRows)
+        assert(featRows.nonEmpty && featRows.size == candRows.size)
       }
-      assert(rows(bucketed.train) == rows(result.train))
-      assert(rows(bucketed.valid) == rows(result.valid))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_rr_spec_bucketed")
     }
   }
 }

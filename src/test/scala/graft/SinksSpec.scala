@@ -28,13 +28,13 @@ class SinksSpec extends SparkSpec {
     assert(pruned.count() == 500L)
   }
 
-  test("writeScanParallelParquet: bounded row groups make a single file splittable") {
+  test("writeParquet(rowGroupBytes): bounded row groups make a single file splittable") {
     val dir = Files.createTempDirectory("sinks").toString + "/rg"
     // ~100k rows x ~100B of incompressible-ish text ≈ several MB
     val df = spark.range(100000L)
       .select(col("id"), md5(concat_ws("_", col("id"), lit("pad"))).as("t"))
       .coalesce(1)
-    Sinks.writeScanParallelParquet(df, dir, rowGroupBytes = 256L * 1024)
+    Sinks.writeParquet(df, dir, rowGroupBytes = Some(256L * 1024))
     val back = spark.read.parquet(dir)
     assert(back.count() == 100000L)
 

@@ -54,6 +54,14 @@ class ToolSurfaceSpec extends AnyFunSuite {
     mains.foreach(p => assert(sources.exists(_._1 == p), s"$p missing"))
   }
 
+  test("only core.Sinks sets parquet writer options") {
+    // row-group and file-size options live in the one parquet writer,
+    // Sinks.writeParquet; a second writer chain cannot grow back
+    val bad = offenders(""""(parquet\.block\.size|maxRecordsPerFile)"""",
+      Set("main/scala/graft/core/Sinks.scala"))
+    assert(bad.isEmpty, s"write parquet through graft.core.Sinks.writeParquet: $bad")
+  }
+
   test("only pipeline/RetailRocket.scala wires the build") {
     // tools observe the build's stages through buildAll's stage hook;
     // a hand-wired stage sequence elsewhere measures another program
