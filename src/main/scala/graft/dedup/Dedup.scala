@@ -264,29 +264,16 @@ object Dedup {
       .distinct()
   }
 
-  /** Connected components over near-dup pairs by iterative min-label
-    * propagation: every doc's label converges to the smallest doc id
-    * reachable through the pair graph, so transitive duplicates
-    * (a~b, b~c ⇒ {a,b,c}) collapse into one group even when a~c was
-    * never a direct candidate pair.
-    *
-    * Each iteration = one join + aggregate (labels shuffle on id);
-    * iterations needed = graph diameter (near-dup clusters are
-    * shallow — a handful). `maxIter` bounds the work; the loop exits
-    * early at fixpoint (no label changed). For adversarial deep chains
-    * at extreme scale, [[connectedComponentsStar]] converges in
-    * O(log² n) rounds regardless of diameter — same interface, and
-    * [[connectedComponentsAuto]] routes to it past the driver limit.
-    *
-    * Input: pairs (id_a, id_b). Output: (id, component) for every id
-    * present in any pair.
-    */
   /** Hybrid CC: the verified near-dup graph is orders of magnitude
     * smaller than the corpus (only docs with a confirmed ≥-threshold
     * pair appear), so up to `driverEdgeLimit` edges it is solved with
     * an exact driver-side union-find (microseconds, zero extra jobs)
     * and broadcast back. Larger graphs fall through to the distributed
-    * iteration. The limit bounds driver memory at ~16 B/edge.
+    * [[connectedComponentsStar]]. The limit bounds driver memory at
+    * ~16 B/edge.
+    *
+    * Input: pairs (id_a, id_b). Output: (id, component) for every id
+    * present in any pair; component = the component's minimum id.
     */
   def connectedComponentsAuto(
       pairs: DataFrame,
@@ -313,51 +300,11 @@ object Dedup {
     ids.map(id => (id, find(id))).toSeq.toDF("id", "component")
   }
 
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    // the near-dup graph is tiny relative to the corpus — run the
-    // iteration at low parallelism so per-round shuffle setup doesn't
-    // dominate
-    val edges = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .coalesce(8)
-      .transform(graft.core.Caches.cache)
-    // each round is localCheckpoint'ed: lineage otherwise triples per
-    // iteration (labels referenced by the join AND the union) and the
-    // 3^maxIter logical plan OOMs on stringification alone long before
-    // the data does; snapshots are reclaimed by the ContextCleaner once
-    // the previous round's reference drops
-    var labels = edges.select(col("src").as("id"), col("src").as("component"))
-      .union(edges.select(col("dst").as("id"), col("dst").as("component")))
-      .groupBy("id").agg(min("component").as("component"))
-      .localCheckpoint(true)
-    // labels only ever DECREASE, so Σ component strictly decreases iff
-    // any label changed — convergence is one cheap agg, not a join
-    var prevSum = labels.agg(sum("component")).head().getLong(0)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val next = labels
-        .union(edges
-          .join(labels.withColumnRenamed("id", "dst"), Seq("dst"))
-          .select(col("src").as("id"), col("component")))
-        .groupBy("id").agg(min("component").as("component"))
-        .localCheckpoint(true)
-      val nextSum = next.agg(sum("component")).head().getLong(0)
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      i += 1
-    }
-    labels
-  }
-
   /** Large-star/small-star connected components (Kiveris et al. 2014,
     * "Connected Components in MapReduce and Beyond") — the web-scale
-    * path of [[connectedComponentsAuto]]: converges in O(log² n)
-    * rounds REGARDLESS of graph diameter, where [[connectedComponents]]
-    * min-label propagation needs diameter rounds and its `maxIter = 10`
-    * silently under-merges an adversarial deep chain.
+    * path of [[connectedComponentsAuto]], which runs it past its
+    * driver edge limit: converges in O(log² n) rounds REGARDLESS of
+    * graph diameter, where min-label propagation needs diameter rounds.
     *
     * Edges are kept canonical (u, v) with u > v and deduplicated.
     * Large-star rewires every strictly-larger neighbor of a node to the
@@ -366,13 +313,15 @@ object Dedup {
     * Both steps are one groupBy(node) + one equi-join — no diameter
     * dependence, per-round shuffle bounded by the (shrinking) edge set.
     * Component labels are the component-minimum id, identical to the
-    * min-label and union-find paths, so the three routes are
-    * interchangeable. Convergence is an EXACT edge-set equality check
-    * (count + except — no probabilistic checksum), once per round.
+    * union-find path of [[connectedComponentsAuto]], so the two routes
+    * are interchangeable. Convergence is an EXACT edge-set equality
+    * check (count + except — no probabilistic checksum), once per
+    * round; a graph still changing after `maxIter` rounds throws
+    * IllegalStateException rather than return a partial labelling.
     *
-    * Output contract matches [[connectedComponents]]: (id, component)
-    * for every id present in any input pair, self-labeled when its
-    * pairs were all self-loops.
+    * Output contract matches [[connectedComponentsAuto]]: (id,
+    * component) for every id present in any input pair, self-labeled
+    * when its pairs were all self-loops.
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     val nodes = pairs.select(col("id_a").cast("long").as("id"))
@@ -434,15 +383,15 @@ object Dedup {
       eCount = nextCount
       i += 1
     }
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponentsStar: not converged after $i rounds, $eCount edges left")
     // at the star fixpoint every non-minimum node carries exactly one
     // edge to its component minimum; minima and self-loop-only nodes
     // label themselves
     nodes
       .join(e.select(col("u").as("id"), col("v").as("component")), Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      // defensive min-reduce: a maxIter bailout mid-convergence could
-      // leave a node with several candidate parents; keep the smallest
-      .groupBy(col("id")).agg(min(col("component")).as("component"))
   }
 
   /** End-to-end near-duplicate dedup: MinHash-LSH blocking → exact
@@ -1184,57 +1133,17 @@ object Dedup {
       .select("id", "contained_in", "inter_count", "n_id", "containment_ppm")
   }
 
-  /** Winnowing fingerprint selection (Schleimer–Wilkerson–Aiken, the
-    * MOSS algorithm): hash every positional word `n`-shingle to a
-    * 60-bit integer, slide a `w`-window over the hash SEQUENCE, and
-    * select the minimum of each window (rightmost occurrence on ties).
-    * Guarantees: any shared run of ≥ w+n−1 words between two docs
-    * shares ≥ 1 selected fingerprint (detection guarantee), while only
-    * ~2/(w+1) of positions are kept (density guarantee) — robust
-    * local fingerprinting that, unlike fixed-stride spans (q102/q128's
-    * regime), survives single-word edits shifting alignment.
-    *
-    * Returns one row per doc per DISTINCT selected (pos, hash):
-    * (id, pos, fp) — pos is the 1-based shingle index. Entirely
-    * row-local (zero exchanges): the hash array is materialized once
-    * per row, then the window argmin is O(len·w) array math on it.
-    */
-  def winnowedFingerprints(
-      docs: DataFrame,
-      textCol: String,
-      idCol: String,
-      n: Int,
-      w: Int): DataFrame = {
-    // two selects: `hs` is a materialized column, so the per-element
-    // transform below references an attribute, not a recomputed
-    // subtree (the composed-HOF re-evaluation trap)
-    val hashed = docs.select(
-      col(idCol).as("id"),
-      transform(wordShingles(col(textCol), n), s =>
-        org.apache.spark.sql.graft.VectorExpressions.md5Prefix60(s)).as("hs"))
-    // window starting at i (0-based): slice hs[i+1 .. i+w]; min hash;
-    // rightmost argmin = w − first-position-in-reversed-window + i
-    val sel = transform(
-      sequence(lit(0), size(col("hs")) - w),
-      i => {
-        val win = slice(col("hs"), i + 1, lit(w))
-        val mn = array_min(win)
-        struct(
-          (i + lit(w) + 1L - array_position(reverse(win), mn)).as("pos"),
-          mn.as("fp"))
-      })
-    hashed
-      .filter(size(col("hs")) >= w)
-      .select(col("id"), explode(array_distinct(sel)).as("s"))
-      .select(col("id"), col("s.pos").cast("long").as("pos"), col("s.fp").as("fp"))
-  }
-
   /** Row-local distinct selected fingerprint SET per doc (no
-    * positions): (id, fps array<long>). Same selection rule as
-    * [[winnowedFingerprints]]; the distinct happens inside the row, so
-    * downstream postings need no corpus-wide DISTINCT exchange.
-    * Native one-pass kernel (WinnowedFps scaladoc: the composed-HOF
-    * form re-evaluated per postings-explode output element — 14×).
+    * positions): (id, fps array<long>). Winnowing selection
+    * (Schleimer–Wilkerson–Aiken, the MOSS algorithm): hash every
+    * positional word `n`-shingle to a 60-bit integer, slide a
+    * `w`-window over the hash sequence and keep each window's minimum,
+    * so any shared run of ≥ w+n−1 words between two docs shares ≥ 1
+    * selected fingerprint while only ~2/(w+1) of positions are kept.
+    * The distinct happens inside the row, so downstream postings need
+    * no corpus-wide DISTINCT exchange. Native one-pass kernel
+    * (WinnowedFps scaladoc: the composed-HOF form re-evaluated per
+    * postings-explode output element — 14×).
     */
   private def winnowedFpSets(
       docs: DataFrame,

@@ -340,208 +340,4 @@ object Aggregates {
       .agg(expr(s"sum($countCol * __s_micro) div total").as("entropy_micro"))
       .select((keys :+ col("n_outcomes")) :+ col("total") :+ col("entropy_micro"): _*)
   }
-
-  /** Per-group exact lower median — the `(n+1) div 2` order statistic
-    * of `valueCol` within each `groupCols` tuple — via the
-    * [[exactMedianTwoPass]] histogram pattern generalized to grouped
-    * data: every round is ONE histogram aggregation over the input
-    * (`groupBy(group, v div width_g)`), with per-group widths attached
-    * by a broadcast of the ≤`maxGroups`-row driver state. All groups
-    * advance together, so total rounds = the SLOWEST group's
-    * `log_buckets(domain)` — 2–3 in practice — independent of group
-    * count.
-    *
-    * Why this exists next to [[graft.ops.Stats.medianFromCounts]]: the
-    * support-cumsum form builds a `(group, value, count)` support,
-    * which is exactly right when values repeat (support ≪ rows) and
-    * degenerates to a full row exchange when values are NEAR-UNIQUE
-    * (support ≈ rows — the q114 bench-head regression at sf0.1's cent
-    * domain). The histogram form's shuffle is `groups × ≤buckets`
-    * partial counts per round — map-side combined, value-domain-free —
-    * so it is the right median for near-unique domains at any scale.
-    *
-    * Driver bounds (the q69 collect-bound rule, per group): each
-    * round collects ≤ `maxGroups · max(buckets, collectBound)` count
-    * rows; `maxGroups` is asserted. Output: groupCols* +
-    * (`n_total`, `<outName>`) as a driver-literal frame — callers
-    * broadcast it back onto fact rows (3-ish rows for a flag
-    * dimension), and plan text stays value-free (LocalTableScan
-    * prints attributes only).
-    */
-  def exactMedianPerGroupTwoPass(
-      df: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      outName: String,
-      buckets: Int = 4096,
-      collectBound: Long = 1L << 16,
-      maxGroups: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val gcols = groupCols.map(col)
-    val v = col(valueCol)
-    val groupSchema = StructType(groupCols.map(c =>
-      StructField(c, df.schema(c).dataType, nullable = true)))
-    val outSchema = StructType(groupSchema.fields ++ Seq(
-      StructField("n_total", LongType, nullable = false),
-      StructField(outName, LongType, nullable = false)))
-    // Null group keys would survive this groupBy but never match the
-    // per-round equi-join against stDf below (equi-joins drop null
-    // keys), so hist(key) would throw for any non-degenerate null-key
-    // group — drop them up front (ADVICE r15). The value column must
-    // be bigint-castable: min/max are read back as Long, and the
-    // histogram buckets on `cast(value as bigint)`.
-    val nonNullKeys =
-      gcols.map(_.isNotNull).reduceOption(_ && _).getOrElse(lit(true))
-    val base = df.filter(v.isNotNull && nonNullKeys)
-    val init = base
-      .groupBy(gcols: _*)
-      .agg(min(v.cast("long")).as("__lo"), max(v.cast("long")).as("__hi"),
-        count(lit(1)).as("__n"))
-      .collect()
-    require(init.length <= maxGroups,
-      s"exactMedianPerGroupTwoPass: ${init.length} groups exceeds driver bound $maxGroups")
-    if (init.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], outSchema)
-    val nG = groupCols.length
-    // per-group narrowing state, keyed by the group tuple
-    final class St(var lo: BigInt, var hi: BigInt, var below: Long, val n: Long) {
-      var median: Option[Long] = None
-      val k: Long = (n - 1) / 2 // 0-based rank of the type-1 lower median
-      // one `v div width` expression on histogram AND narrowing keeps
-      // bucket order == value order with no boundary disagreement
-      def width: Long = {
-        val range = hi - lo
-        if (range <= BigInt(collectBound)) 1L
-        else (range / buckets + 1).min(BigInt(Long.MaxValue)).toLong
-      }
-    }
-    val state = scala.collection.mutable.LinkedHashMap(
-      init.map(r => (r.toSeq.take(nG), new St(
-        BigInt(r.getLong(nG)), BigInt(r.getLong(nG + 1)), 0L, r.getLong(nG + 2)))): _*)
-    // degenerate groups (lo == hi) finish without any histogram round
-    state.valuesIterator.foreach(st => if (st.lo == st.hi) st.median = Some(st.lo.toLong))
-    while (state.valuesIterator.exists(_.median.isEmpty)) {
-      val live = state.iterator.filter(_._2.median.isEmpty).toSeq
-      val stRows = live.map { case (key, st) =>
-        Row.fromSeq(key ++ Seq(st.lo.toLong, st.hi.toLong, st.width))
-      }
-      val stSchema = StructType(groupSchema.fields ++ Seq(
-        StructField("__glo", LongType, nullable = false),
-        StructField("__ghi", LongType, nullable = false),
-        StructField("__gw", LongType, nullable = false)))
-      val stDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(stRows, 1), stSchema)
-      val hist = base
-        .join(broadcast(stDf), groupCols)
-        .filter(v.cast("long").between(col("__glo"), col("__ghi")))
-        .groupBy(gcols :+ expr(s"cast($valueCol as bigint) div __gw").as("__b"): _*)
-        .agg(count(lit(1)).as("__c"))
-        .collect()
-        .groupBy(r => r.toSeq.take(nG))
-      live.foreach { case (key, st) =>
-        val width = st.width
-        val hs = hist(key)
-          .map(r => (r.getLong(nG), r.getLong(nG + 1))).sortBy(_._1)
-        var cum = st.below
-        val (bkt, cumBelow) = hs
-          .find { case (_, c) => { val hit = cum + c > st.k; if (!hit) cum += c; hit } }
-          .map { case (b, _) => (b, cum) }.get
-        if (width == 1L) st.median = Some(bkt) // bucket id IS the value
-        else {
-          // trunc-division bucket b spans [bw−w+1, bw] for b<0,
-          // [bw, bw+w−1] for b>0, [−w+1, w−1] for b=0 (both signs)
-          val bw = BigInt(bkt) * width
-          val (bLo, bHi) =
-            if (bkt > 0) (bw, bw + width - 1)
-            else if (bkt < 0) (bw - width + 1, bw)
-            else (BigInt(1) - width, BigInt(width) - 1)
-          st.lo = bLo.max(st.lo)
-          st.hi = bHi.min(st.hi)
-          st.below = cumBelow
-        }
-      }
-    }
-    val out = state.iterator.map { case (key, st) =>
-      Row.fromSeq(key ++ Seq(st.n, st.median.get))
-    }.toSeq
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), outSchema)
-  }
-
-  def exactMedianTwoPass(
-      df: DataFrame,
-      valueCol: Column,
-      buckets: Int = 4096,
-      collectBound: Long = 1L << 16): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val v = df.select(valueCol.cast("long").as("v")).filter(col("v").isNotNull)
-    val (lo, hi, n) = {
-      val r = v.agg(min(col("v")), max(col("v")), count(lit(1))).head()
-      if (r.isNullAt(0)) return Seq.empty[(Long, Long)].toDF("n_rows", "median")
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    val k = (n - 1) / 2 // 0-based rank of the type-1 median
-    // range bounds of the bucket still containing rank k; `below` = rows
-    // strictly below the current range
-    var curLo = BigInt(lo)
-    var curHi = BigInt(hi)
-    var below = 0L
-    var median: Option[Long] = None
-    while (median.isEmpty) {
-      // width via BigInt (hi - lo alone can overflow Long), capped into
-      // Long range; bucket id = the SAME `v div width` expression in the
-      // histogram AND the narrowing filter — truncating division is
-      // monotone in v, so bucket order is value order, and using one
-      // expression on both passes removes boundary-arithmetic
-      // disagreement.
-      val width = ((curHi - curLo) / buckets + 1).min(BigInt(Long.MaxValue)).toLong
-      val bucketOf = expr(s"v div ${width}L")
-      val vin = v.filter(col("v").between(curLo.toLong, curHi.toLong))
-      if (width <= collectBound) {
-        // terminal pass: ≤ `buckets` candidate buckets remain; find the
-        // rank-k bucket, then collect its ≤ width distinct value-counts
-        val hist = vin
-          .groupBy(bucketOf.as("b"))
-          .agg(count(lit(1)).as("c"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        var cum = below
-        val (bkt, cumBelow) = hist
-          .find { case (_, c) => { val hit = cum + c > k; if (!hit) cum += c; hit } }
-          .map { case (b, _) => (b, cum) }.get
-        val inBucket = vin
-          .filter(bucketOf === bkt)
-          .groupBy(col("v")).agg(count(lit(1)).as("c"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        var cum2 = cumBelow
-        median = inBucket
-          .find { case (_, c) => { val hit = cum2 + c > k; if (!hit) cum2 += c; hit } }
-          .map(_._1)
-      } else {
-        // hot-bucket recursion: locate the rank-k bucket and narrow the
-        // range to it. Trunc-division bucket b spans [b·w−w+1, b·w] for
-        // b<0, [b·w, b·w+w−1] for b>0, and [−w+1, w−1] for b=0 (both
-        // signs divide to 0) — clamped to the current range.
-        val hist = vin
-          .groupBy(bucketOf.as("b"))
-          .agg(count(lit(1)).as("c"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        var cum = below
-        val (bkt, cumBelow) = hist
-          .find { case (_, c) => { val hit = cum + c > k; if (!hit) cum += c; hit } }
-          .map { case (b, _) => (b, cum) }.get
-        val bw = BigInt(bkt) * width
-        val (bLo, bHi) =
-          if (bkt > 0) (bw, bw + width - 1)
-          else if (bkt < 0) (bw - width + 1, bw)
-          else (BigInt(1) - width, BigInt(width) - 1)
-        curLo = bLo.max(curLo)
-        curHi = bHi.min(curHi)
-        below = cumBelow
-      }
-    }
-    Seq((n, median.get)).toDF("n_rows", "median")
-  }
 }

@@ -606,61 +606,6 @@ object Graph {
     degrees(e)
   }
 
-  /** Degree-oriented triangle counting — the hub-resistant sibling of
-    * [[triangleCounts]]. Edges are re-oriented from the (degree, id)-
-    * SMALLER endpoint to the larger (total order: degree first, id
-    * tie-break), which caps every out-neighborhood at O(√m): a hub of
-    * degree d keeps only out-edges to higher-degree vertices, so the
-    * wedge self-join does Σ outdeg² ≪ Σ deg² work on power-law graphs.
-    * Identical triangle set and per-vertex counts as the id-oriented
-    * plan (orientation is internal; each triangle has exactly one
-    * (deg,id)-minimal apex) — same oracle. Costs one extra
-    * degree-attach join per side; ProbeTriangles measured when that
-    * premium pays (hub regime) and when it doesn't (flat-degree covis
-    * at test SFs, where [[triangleCounts]] stays the default) — DESIGN.md
-    * "Asymmetric dedup & graph metrics",
-    * `git show 519ff36:src/main/scala/graft/ProbeTriangles.scala`.
-    */
-  def triangleCountsDegreeOriented(
-      edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val deg = e0
-      .select(explode(array(col("src"), col("dst"))).as("id"))
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("deg"))
-    // orient by (deg, id): u→v iff (deg_u, u) < (deg_v, v)
-    val dirE = Caches.cache(
-      e0.join(deg.select(col("id").as("src"), col("deg").as("ds")), Seq("src"))
-        .join(deg.select(col("id").as("dst"), col("deg").as("dd")), Seq("dst"))
-        .select(
-          when(
-            col("ds") < col("dd") ||
-              (col("ds") === col("dd") && col("src") < col("dst")),
-            struct(col("src").as("a"), col("dst").as("b"),
-              col("ds").as("da"), col("dd").as("db")))
-            .otherwise(struct(col("dst").as("a"), col("src").as("b"),
-              col("dd").as("da"), col("ds").as("db")))
-            .as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"),
-          col("e.da").as("da"), col("e.db").as("db")))
-    // wedges at the (deg,id)-minimal apex: pair the apex's out-edges
-    // with (deg,id)-ordered endpoints, close with a directed edge b→c
-    val wedges = dirE.as("ab")
-      .join(dirE.as("ac"), col("ab.a") === col("ac.a"))
-      .filter(
-        col("ab.db") < col("ac.db") ||
-          (col("ab.db") === col("ac.db") && col("ab.b") < col("ac.b")))
-      .select(col("ab.a").as("a"), col("ab.b").as("b"), col("ac.b").as("c"))
-    val tri = wedges.join(
-      dirE.select(col("a").as("b"), col("b").as("c")),
-      Seq("b", "c"),
-      "left_semi")
-    tri
-      .select(explode(array(col("a"), col("b"), col("c"))).as("id"))
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("tri_count"))
-  }
-
   /** Self-inclusive synchronized label propagation (Raghavan et al.
     * 2007 with the node-inclusive neighborhood), `rounds` fixed
     * rounds — community detection, the coarser sibling of connected

@@ -95,40 +95,6 @@ object Sketches {
     sketches.groupBy(col(groupCol))
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("approx_distinct"))
 
-  /** Rolling-window distinct count via mergeable HLL partials — the
-    * scale sibling of the window-membership explode (q127/q240's
-    * rolling MAU). `unitCol` is an integral time unit (day number);
-    * each key contributes to the `windowSize` units
-    * [unit, unit + windowSize).
-    *
-    * Why it matters at 100 TB: the exact form fans the FACT grain ×30
-    * ((user, day) rows each exploded into 30 window days) and pays a
-    * full distinct shuffle on the amplified table. Here the fan-out
-    * happens at the SKETCH grain — one ~KB sketch per active day,
-    * replicated windowSize times: n_days × windowSize rows total,
-    * INDEPENDENT of user cardinality — and merge is a map-side-
-    * combinable `hll_union_agg`. Standard DataSketches HLL error
-    * (±~1.6% rel at lgK=12, 3σ ≈ 5%); exact path stays the oracle
-    * contract, this is the opt-in swap past the shuffle cliff.
-    *
-    * Output: (unit, approx_distinct) for every unit any window covers.
-    */
-  def rollingDistinctHll(
-      df: DataFrame,
-      unitCol: String,
-      keyCol: String,
-      windowSize: Int,
-      lgConfigK: Int = 12): DataFrame = {
-    require(windowSize >= 1, "windowSize must be >= 1")
-    df.groupBy(col(unitCol).cast("long").as("__u"))
-      .agg(hll_sketch_agg(col(keyCol), lit(lgConfigK)).as("sketch"))
-      .select(
-        explode(sequence(col("__u"), col("__u") + (windowSize - 1L))).as(unitCol),
-        col("sketch"))
-      .groupBy(col(unitCol))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("approx_distinct"))
-  }
-
   // ——— deterministic log-histogram quantile sketch (DDSketch family) ———
   //
   // Buckets for a non-negative long v: v < 16 is stored exactly

@@ -105,12 +105,12 @@ object Stats {
     * while this never shuffles more than `groups × (span/2^shift +
     * 2^shift)` count rows. Precondition (asserted nowhere — document at
     * call sites): per-group value span ≤ ~2^(shift+20) so the level-1
-    * histogram stays ≤ ~1M buckets; use
-    * [[graft.ops.Aggregates.exactMedianPerGroupTwoPass]] for unbounded
-    * domains. Trunc-division bucket ids are monotone in v, so bucket
-    * order is value order (bucket 0 spans both signs — harmless here:
-    * level 2 filters by bucket MEMBERSHIP, and its width only bounds
-    * the slice size). Output: partCols* + (`n_total`, `<outName>`).
+    * histogram stays ≤ ~1M buckets; a wider span needs a larger
+    * `shift`, which grows the level-2 slice with it. Trunc-division
+    * bucket ids are monotone in v, so bucket order is value order
+    * (bucket 0 spans both signs — harmless here: level 2 filters by
+    * bucket MEMBERSHIP, and its width only bounds the slice size).
+    * Output: partCols* + (`n_total`, `<outName>`).
     */
   def medianHotBucket(
       df: DataFrame,

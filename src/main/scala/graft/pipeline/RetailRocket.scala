@@ -95,39 +95,6 @@ object RetailRocket {
   def readEventsCsv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").schema(eventsCsvSchema).csv(path)
 
-  /** One-time bucketed materialization of the sessionized events table
-    * — the storage-level answer to the session-key shuffles. Written
-    * `bucketBy(session_id)` + sorted, every downstream consumer that
-    * needs a session_id distribution plans ZERO exchange over the big
-    * side: the J3 prefix join (both sides derive from this scan), the
-    * J4 covis distinct/self-join, and per-session aggregations.
-    * Composite-key operators (distinct on (session_id, atc_ts),
-    * groupBy (session_id, item_id)) are covered too — hash partitioning
-    * on a PREFIX of the clustering keys satisfies the distribution, so
-    * Catalyst keeps the scan partitioning instead of reshuffling.
-    *
-    * At 100 TB this is the difference between shuffling the event log
-    * once at ingest (write-side, amortized over every later query) and
-    * shuffling it in every pipeline run. Pair `buckets` with the
-    * cluster's target partition size (~128 MB/bucket-file). [[buildAll]]
-    * does not use it: on one node the bucketed build measured slower
-    * (DESIGN.md "Partitioning strategy"); BucketingSpec pins its rows
-    * and its exchange-free joins.
-    */
-  def bucketizeEvents(
-      events: DataFrame,
-      tableName: String = "graft_events_bucketed",
-      buckets: Int = 32): DataFrame = {
-    val spark = events.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    events.write
-      .mode("overwrite")
-      .bucketBy(buckets, "session_id")
-      .sortBy("session_id", "ts")
-      .saveAsTable(tableName)
-    spark.table(tableName)
-  }
-
   /** The property parts as one scan with the explicit [[propsCsvSchema]]
     * (the reference reads each part with `inferSchema=True` and unions
     * them, `:149-150`).

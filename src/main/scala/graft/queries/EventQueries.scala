@@ -3789,12 +3789,11 @@ object EventQueries {
     * period's start by construction.
     *
     * Scale note: the explode amplifies the (user, day) grain ×30 —
-    * the suite's next shuffle cliff. Past it, [[dauMauStickinessHll]]
-    * swaps the rolling distinct for merged per-day HLL partials
-    * ([[graft.ops.Sketches.rollingDistinctHll]]): fan-out at the
-    * sketch grain (days × 30 rows, user-cardinality-independent), at
-    * ±~2% MAU error. Opt-in like the covis prefilter; this exact form
-    * stays the oracle contract.
+    * the suite's next shuffle cliff. Merged per-day HLL partials
+    * ([[graft.ops.Sketches.hllMergeEstimate]]) would move the fan-out
+    * to the sketch grain (days × 30 rows) at ±~2% MAU error; no
+    * workload has reached the cliff, so the exact form is the only
+    * implementation and the oracle contract.
     */
   def dauMauStickiness(s: SparkSession, d: String): DataFrame = {
     val du = Tables.events(s, d)
@@ -3811,32 +3810,6 @@ object EventQueries {
       .select(
         col("day"), col("dau"), col("mau"),
         expr("dau * 1000000 div mau").as("stickiness_ppm"))
-      .orderBy(col("day"))
-  }
-
-  /** HLL sibling of [[dauMauStickiness]] — same output shape with
-    * `mau` approximate (`mau_approx`): per-day exact DAU joined to the
-    * rolling-30 HLL-merged distinct. The 30× row amplification moves
-    * from the fact grain to the sketch grain; see
-    * [[graft.ops.Sketches.rollingDistinctHll]]. Spec-bounded
-    * (SkewAndSketchSpec pins the error vs the exact path), not
-    * oracle-hashed — DuckDB's HLL estimates differently.
-    */
-  def dauMauStickinessHll(s: SparkSession, d: String): DataFrame = {
-    val du = Tables.events(s, d)
-      .select(col("user_id"), expr("unix_timestamp(ts) div 86400").as("day"))
-      .distinct()
-      .localCheckpoint(true)
-    val dau = du.groupBy(col("day")).agg(count(lit(1)).as("dau"))
-    val mau = graft.ops.Sketches
-      .rollingDistinctHll(du, "day", "user_id", windowSize = 30)
-      .select(col("day").as("w_day"),
-        col("approx_distinct").cast("long").as("mau_approx"))
-    dau
-      .join(mau, col("day") === col("w_day"))
-      .select(
-        col("day"), col("dau"), col("mau_approx"),
-        expr("dau * 1000000 div mau_approx").as("stickiness_ppm"))
       .orderBy(col("day"))
   }
 

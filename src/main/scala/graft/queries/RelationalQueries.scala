@@ -256,11 +256,9 @@ object RelationalQueries {
     * hot-bucket form (Stats.medianHotBucket): level-1 histogram over
     * `cents div 2^16` (span-bounded, ~10^7-cent domain → ~160 buckets),
     * level-2 re-scan of the single hot bucket. No global sort, no
-    * driver loop: the former eager two-pass form
-    * (Ag.exactMedianTwoPass) executed Spark jobs at PLAN-CONSTRUCTION
-    * time, which broke FpAll's construction-only contract (VERDICT r15
-    * item 6); the driver-looped form remains in Aggregates only for
-    * genuinely unbounded value spans.
+    * driver loop: a driver-looped median runs Spark jobs at
+    * PLAN-CONSTRUCTION time, which breaks FpAll's construction-only
+    * contract (VERDICT r15 item 6).
     */
   def exactMedian(s: SparkSession, d: String): DataFrame =
     Stats.medianHotBucket(

@@ -98,9 +98,7 @@ object TextQueries {
 
   /** IVF coarse-quantized ANN — the deterministic quantizer variant
     * (md5-rank seeds + one exact-integer Lloyd step), bit-identical
-    * across engines and therefore oracle-checkable. [[Similarity
-    * .ivfTopK]] (MLlib k-means) stays as the library's trained-quantizer
-    * path.
+    * across engines and therefore oracle-checkable.
     */
   def knnIvf(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)

@@ -64,7 +64,7 @@ object Similarity {
     * ENFORCED: an `assert_true` guard fails the job loud when
     * |queries|·|corpus| exceeds `maxComparisons` instead of silently
     * running an unbounded scan-per-query. Scale paths:
-    * [[lshBucketedTopK]] (multi-probe) / [[ivfTopK]].
+    * [[lshBucketedTopK]] (multi-probe) / [[ivfTopKDeterministic]].
     */
   def bruteForceTopK(
       queries: DataFrame,
@@ -96,66 +96,6 @@ object Similarity {
         when(col("__guard").isNull, col("c_emb")).as("c_emb"))
     val scored = c
       .crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(
-        col("query_id"),
-        col("neighbor_id"),
-        qcosine(
-          qdot(col("q_emb"), col("c_emb")),
-          qnorm2(col("q_emb")),
-          qnorm2(col("c_emb"))).as("cosine_sim"))
-    Windows.topKPerGroup(scored, Seq("query_id"), col("cosine_sim"), Seq("neighbor_id"), k)
-  }
-
-  /** IVF (inverted-file) ANN: k-means coarse quantizer partitions the
-    * corpus into `nCentroids` cells; each query probes its `nProbe`
-    * nearest cells and scores exact cosine only there. The second
-    * standard scale path next to [[lshBucketedTopK]] — better recall
-    * per probe on clustered data, at the cost of training the
-    * quantizer. Centroid assignment shuffles the corpus once by cell;
-    * the probe table is tiny and broadcast.
-    */
-  def ivfTopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      embCol: String,
-      k: Int,
-      nCentroids: Int,
-      nProbe: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
-    val corpusV = corpus.select(
-      col(idCol).as("neighbor_id"),
-      quantize(col(embCol)).as("c_emb"),
-      array_to_vector(col(embCol).cast("array<double>")).as("fv"))
-    val model = new KMeans()
-      .setK(nCentroids).setSeed(42L).setFeaturesCol("fv").setPredictionCol("cid")
-      .fit(corpusV)
-    val assigned = model.transform(corpusV).select("neighbor_id", "c_emb", "cid").transform(graft.core.Caches.cache)
-
-    // centroid table is tiny: quantize and broadcast it for probing
-    import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat).toSeq) }.toSeq
-      .toDF("cid", "cemb")
-      .select(col("cid"), quantize(col("cemb")).as("cq"))
-
-    val q = queries.select(col(idCol).as("query_id"), quantize(col(embCol)).as("q_emb"))
-    // nProbe nearest centroids per query by exact integer L2
-    val probes = Windows
-      .topKPerGroup(
-        q.crossJoin(broadcast(centroids))
-          .withColumn(
-            "negdist",
-            qdot(col("q_emb"), col("cq")) * 2L - qnorm2(col("cq"))), // -||q-c||² + ||q||²
-        Seq("query_id"), col("negdist"), Seq("cid"), nProbe)
-      .select("query_id", "q_emb", "cid")
-
-    val scored = probes
-      .join(assigned, Seq("cid"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(
         col("query_id"),
@@ -401,9 +341,12 @@ object Similarity {
     java.lang.Long.parseLong(hex, 16) % 1000 - 500
   }
 
-  /** IVF with a fully DETERMINISTIC coarse quantizer (the
-    * oracle-checkable sibling of [[ivfTopK]], whose MLlib k-means is
-    * seeded but not bit-stable across partitionings).
+  /** IVF (inverted-file) ANN with a fully DETERMINISTIC coarse
+    * quantizer: `nCentroids` cells partition the corpus; each query
+    * probes its `nProbe` nearest cells and scores exact cosine only
+    * there. The second scale path next to [[lshBucketedTopK]]. Unlike
+    * an MLlib k-means quantizer (seeded but not bit-stable across
+    * partitionings), it is oracle-checkable.
     *
     * Quantizer: `nCentroids` seed vectors picked by md5-rank of the id
     * (a deterministic pseudo-random sample), then ONE Lloyd refinement
@@ -421,8 +364,7 @@ object Similarity {
     * same bounded k-row materialization every coarse quantizer does
     * (MLlib exposes `clusterCenters` the same way) and the table is
     * broadcast right back out. Everything else is one corpus shuffle
-    * (the final cell assignment join) + broadcast centroid tables, same
-    * shape as [[ivfTopK]].
+    * (the final cell assignment join) + broadcast centroid tables.
     */
   def ivfTopKDeterministic(
       queries: DataFrame,
@@ -1267,13 +1209,12 @@ object Similarity {
     * largest-|loading| component (min pos on ties) is positive.
     *
     * Scale shape: per iteration ONE scan of the cached centered
-    * corpus — v is a dim-length LITERAL (driver-bounded, the
-    * exactMedianTwoPass two-phase pattern: each round collects `dim`
-    * longs, never corpus rows), sᵢ is a row-local native dot, and y is
-    * a map-side-combinable dim-keyed agg (dim rows cross the wire per
-    * partition, never a vector). The int64 headroom (|x|≤2·10⁴
-    * quantized, |v|≤1024, s div 64) is guarded LOUD at 2·10⁷ rows —
-    * past that, rescale or go to double partials.
+    * corpus — v is a dim-length LITERAL (driver-bounded: each round
+    * collects `dim` longs, never corpus rows), sᵢ is a row-local
+    * native dot, and y is a map-side-combinable dim-keyed agg (dim
+    * rows cross the wire per partition, never a vector). The int64
+    * headroom (|x|≤2·10⁴ quantized, |v|≤1024, s div 64) is guarded
+    * LOUD at 2·10⁷ rows — past that, rescale or go to double partials.
     * Output: (pos, loading_ppm), `dim` rows.
     */
   def powerIterationPc1(

@@ -165,104 +165,4 @@ class AggregatesSpec extends SparkSpec {
     // uniform over 4: H = ln 4 = 1.386294... -> s_micro = 1386294 per outcome, exact mean
     assert(got("u4") == ((4L, 12L, 1386294L)))
   }
-
-  test("exactMedianTwoPass: type-1 median, bucket-boundary and skew cases") {
-    def med(vals: Seq[Long], buckets: Int = 4) = Aggregates
-      .exactMedianTwoPass(vals.toDF("x"), col("x"), buckets)
-      .as[(Long, Long)].head()
-    assert(med(Seq(5L)) == ((1L, 5L)))
-    assert(med(Seq(1L, 2L, 3L)) == ((3L, 2L)))
-    assert(med(Seq(1L, 2L, 3L, 4L)) == ((4L, 2L))) // even n -> lower middle
-    assert(med(Seq(10L, 10L, 10L, 99L)) == ((4L, 10L))) // duplicates
-    // heavy skew: one value dominates; rank lands mid-duplicate-run
-    assert(med(Seq.fill(100)(7L) ++ Seq(1L, 2L, 1000000L)) == ((103L, 7L)))
-    // matches the windowed positional definition on pseudo-random data
-    val rnd = new scala.util.Random(11)
-    val data = Seq.fill(501)(rnd.nextInt(1000).toLong)
-    val expected = data.sorted.apply((data.length - 1) / 2)
-    assert(med(data, buckets = 8) == ((501L, expected)))
-  }
-
-  test("exactMedianPerGroupTwoPass: per-group type-1 medians match the sort definition") {
-    def medians(rows: Seq[(String, Long)], buckets: Int = 4, bound: Long = 16L) =
-      Aggregates.exactMedianPerGroupTwoPass(
-        rows.toDF("g", "x"), Seq("g"), "x", "med",
-        buckets = buckets, collectBound = bound)
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-    def expect(vals: Seq[Long]) = ((vals.length.toLong, vals.sorted.apply((vals.length - 1) / 2)))
-    val rnd = new scala.util.Random(19)
-    // groups with different shapes advancing together: near-unique wide
-    // domain, duplicate-heavy, negative-straddling, single-value
-    // (degenerate — finishes before any histogram round), and size-1
-    val a = Seq.fill(501)(rnd.nextInt(2000000000).toLong + 1000000000L)
-    val b = Seq.fill(100)(7L) ++ Seq(1L, 2L, 1000000L)
-    val c = Seq.fill(50)(-987654321098L) ++ Seq(-5L, 0L, 3L, 7L) ++ Seq.fill(49)(987654321098L)
-    val d = Seq.fill(9)(42L)
-    val e = Seq(-17L)
-    val rows = rnd.shuffle(
-      a.map(("a", _)) ++ b.map(("b", _)) ++ c.map(("c", _)) ++
-        d.map(("d", _)) ++ e.map(("e", _)))
-    val got = medians(rows)
-    assert(got == Map(
-      "a" -> expect(a), "b" -> expect(b), "c" -> expect(c),
-      "d" -> expect(d), "e" -> expect(e)))
-    // result is partitioning-invariant (pure function of the row set)
-    val repart = Aggregates.exactMedianPerGroupTwoPass(
-      rows.toDF("g", "x").repartition(7), Seq("g"), "x", "med",
-      buckets = 4, collectBound = 16L)
-      .as[(String, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(repart == got)
-    // group-count driver bound is asserted
-    intercept[IllegalArgumentException] {
-      Aggregates.exactMedianPerGroupTwoPass(
-        rows.toDF("g", "x"), Seq("g"), "x", "med", maxGroups = 2)
-    }
-  }
-
-  test("exactMedianPerGroupTwoPass: null group keys excluded, int value column cast (ADVICE r15)") {
-    // a null-key group used to survive the init groupBy but never match
-    // the per-round equi-join -> NoSuchElementException; and raw
-    // min/max were read with getLong, throwing on an INT value column
-    val rows = Seq((Option("a"), 10), (Option("a"), 20), (Option("a"), 30),
-      (Option.empty[String], 500), (Option.empty[String], 600),
-      (Option.empty[String], 700))
-      .toDF("g", "x")
-    val out = Aggregates.exactMedianPerGroupTwoPass(
-      rows, Seq("g"), "x", "med", buckets = 4, collectBound = 4L)
-      .as[(String, Long, Long)].collect().toSet
-    assert(out == Set(("a", 3L, 20L)))
-  }
-
-  test("exactMedianPerGroupTwoPass: empty groupCols = global median (no-filter regression)") {
-    // the r16 null-key filter used reduce on the key list — empty
-    // groupCols (the documented global-median form) threw on empty.reduce
-    val rows = Seq(5L, 1L, 9L, 3L, 7L).toDF("x")
-    val out = Aggregates.exactMedianPerGroupTwoPass(
-      rows, Seq.empty, "x", "med", buckets = 4, collectBound = 8L)
-      .as[(Long, Long)].head()
-    assert(out == ((5L, 5L)))
-  }
-
-  test("exactMedianTwoPass: hot-bucket recursion keeps the driver collect bounded") {
-    // 90%-one-value concentration over a huge value range: with
-    // buckets=4 the first histogram puts ~all mass in one very wide
-    // bucket — a direct pass-2 collect would pull every distinct value
-    // in it. collectBound=64 forces the recursion path (several
-    // narrowing scans) and must still land on the exact type-1 median.
-    def med(vals: Seq[Long], buckets: Int, bound: Long) = Aggregates
-      .exactMedianTwoPass(vals.toDF("x"), col("x"), buckets, bound)
-      .as[(Long, Long)].head()
-    val rnd = new scala.util.Random(7)
-    val hot = Seq.fill(900)(1234567890123L)
-    val spread = Seq.fill(100)(1234567000000L + rnd.nextInt(2000000000).toLong)
-    val data = rnd.shuffle(hot ++ spread)
-    val expected = data.sorted.apply((data.length - 1) / 2)
-    assert(med(data, buckets = 4, bound = 64L) == ((1000L, expected)))
-    // negative-range + zero-straddling bucket narrowing
-    val neg = Seq.fill(50)(-987654321098L) ++ Seq(-5L, 0L, 3L, 7L) ++
-      Seq.fill(49)(987654321098L)
-    val expNeg = neg.sorted.apply((neg.length - 1) / 2)
-    assert(med(rnd.shuffle(neg), buckets = 4, bound = 16L) == ((103L, expNeg)))
-  }
 }

@@ -66,7 +66,7 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents: transitive chain collapses to one group") {
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("id_a", "id_b")
-    val cc = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    val cc = Dedup.connectedComponentsAuto(pairs).as[(Long, Long)].collect().toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
   }
 
@@ -78,10 +78,16 @@ class DedupSpec extends SparkSpec {
     val star = Dedup.connectedComponentsStar(chain).as[(Long, Long)].collect()
     assert(star.length == 201)
     assert(star.forall(_._2 == 0L), s"star must collapse the chain to component 0")
-    val minLabel = Dedup.connectedComponents(chain, maxIter = 10)
-      .as[(Long, Long)].collect()
-    assert(minLabel.exists(_._2 != 0L),
-      "planted premise broken: min-label at 10 iterations should under-merge a 200-chain")
+  }
+
+  test("connectedComponentsStar: a graph not converged at maxIter throws") {
+    // one round cannot collapse a 200-chain; a partial labelling would
+    // look like plausible components
+    val chain = (0L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.connectedComponentsStar(chain, maxIter = 1).collect()
+    }
+    assert(e.getMessage.contains("after 1 rounds"), e.getMessage)
   }
 
   test("connectedComponentsStar == union-find on shallow graphs, incl. self-loops") {
@@ -384,21 +390,21 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val text = Seq.tabulate(40)(i => s"w${(i * 13 + 5) % 23}").mkString(" ")
     val wdocs = Seq((1L, text)).toDF("doc_id", "text")
-    val fps = Dedup.winnowedFingerprints(wdocs, "text", "doc_id", n = 3, w = 4)
-      .as[(Long, Long, Long)].collect().map(f => f._2 -> f._3).toMap
+    val fps = wdocs
+      .select(org.apache.spark.sql.graft.WinnowedFps(
+        graft.functions.TextFunctions.wordShingles(col("text"), 3), 4))
+      .as[Seq[Long]].head().toSet
     // recompute the positional hash sequence exactly as the operator does
     val hs = spark.createDataFrame(Seq(Tuple1(text))).toDF("text")
       .select(transform(graft.functions.TextFunctions.wordShingles(col("text"), 3),
         s => conv(substring(md5(s), 1, 15), 16, 10).cast("long")).as("hs"))
       .as[Seq[Long]].head()
     (0 to hs.length - 4).foreach { i =>
-      val win = hs.slice(i, i + 4)
-      val mn = win.min
-      val hit = (i + 1 to i + 4).exists(p => fps.get(p.toLong).contains(mn))
-      assert(hit, s"window at $i: min $mn not selected at any of its positions")
+      val mn = hs.slice(i, i + 4).min
+      assert(fps(mn), s"window at $i: min $mn not selected")
     }
-    // density: selected positions are a strict subset of all positions
-    assert(fps.size < hs.length - 3 + 1)
+    // density: fewer selected fingerprints than windows
+    assert(fps.size < hs.length - 4 + 1)
   }
 
   test("winnowing: native one-pass kernel matches the composed-HOF selection exactly") {

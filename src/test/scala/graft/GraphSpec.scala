@@ -157,26 +157,26 @@ class GraphSpec extends SparkSpec {
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
   }
 
-  test("triangleCountsDegreeOriented: identical per-vertex counts to the id-oriented plan") {
-    // K4 + pendant (above) AND a random-ish sparse graph with a hub:
-    // orientation is internal, the triangle multiset must not change
-    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L), (4L, 5L))
+  test("triangleCounts: low-id hub over a sparse graph matches brute-force enumeration") {
+    // the hub has the lowest id: the id-oriented worst case
     val rnd = new scala.util.Random(11)
-    val hub = (2L to 40L).map(i => (1L, i)) // hub with LOW id: id-oriented worst case
+    val hub = (2L to 40L).map(i => (1L, i))
     val sparse = (1 to 60).map { _ =>
       val a = 2L + rnd.nextInt(39); val b = 2L + rnd.nextInt(39)
       (math.min(a, b), math.max(a, b))
-    }.filter { case (a, b) => a != b }.distinct
-    for (edges <- Seq(k4, (hub ++ sparse).distinct)) {
-      val e = edges.toDF("item_a", "item_b")
-      val (idOr, degOr) = graft.core.Caches.withScope {
-        (Graph.triangleCounts(e, "item_a", "item_b")
-          .as[(Long, Long)].collect().toMap,
-          Graph.triangleCountsDegreeOriented(e, "item_a", "item_b")
-            .as[(Long, Long)].collect().toMap)
-      }
-      assert(degOr == idOr)
+    }.filter { case (a, b) => a != b }
+    val edges = (hub ++ sparse).distinct
+    val adj = edges.toSet
+    val vs = edges.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+    val expected = (for {
+      a <- vs; b <- vs if a < b && adj((a, b)); c <- vs if b < c && adj((b, c)) && adj((a, c))
+      v <- Seq(a, b, c)
+    } yield v).groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val got = graft.core.Caches.withScope {
+      Graph.triangleCounts(edges.toDF("item_a", "item_b"), "item_a", "item_b")
+        .as[(Long, Long)].collect().toMap
     }
+    assert(expected.nonEmpty && got == expected)
   }
 
   test("labelPropagation: two cliques with a bridge keep distinct communities; components would merge them") {

@@ -7,25 +7,6 @@ import org.apache.spark.sql.functions._
 class IvfSpec extends SparkSpec {
   import spark.implicits._
 
-  test("ivfTopK: finds the exact nearest neighbor for clustered data") {
-    // two well-separated clusters; IVF with 2 centroids must route
-    // each query to its own cluster and find its true neighbor
-    def v(base: Float, eps: Float) = Seq.tabulate(8)(i => if (i == 0) base + eps else eps)
-    val corpus = (
-      (1L to 20L).map(i => (i, v(10f, i * 0.001f))) ++
-        (21L to 40L).map(i => (i, v(-10f, i * 0.001f)))).toDF("vec_id", "embedding")
-    val out = Similarity
-      .ivfTopK(
-        corpus.filter(col("vec_id").isin(1L, 21L)), corpus, "vec_id", "embedding",
-        k = 3, nCentroids = 2, nProbe = 1)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    // neighbors stay within the query's own cluster
-    assert(out(1L).forall(_ <= 20L))
-    assert(out(21L).forall(_ >= 21L))
-    assert(out(1L).size == 3 && out(21L).size == 3)
-  }
-
   test("ivfTopKDeterministic: cluster routing + bit-identical under repartition") {
     def v(base: Float, eps: Float) = Seq.tabulate(8)(i => if (i == 0) base + eps else eps)
     val corpus = (
@@ -40,6 +21,7 @@ class IvfSpec extends SparkSpec {
     val byQ = rows.groupBy(_.getAs[Long]("query_id"))
     assert(byQ(1L).forall(_.getAs[Long]("neighbor_id") <= 20L))
     assert(byQ(21L).forall(_.getAs[Long]("neighbor_id") >= 21L))
+    assert(byQ(1L).size == 3 && byQ(21L).size == 3)
     // exact same rows (scores included) under a different partitioning
     val again = Similarity
       .ivfTopKDeterministic(queries.repartition(7), corpus.repartition(5),

@@ -178,34 +178,6 @@ class SkewAndSketchSpec extends SparkSpec {
     }
   }
 
-  test("rollingDistinctHll: within HLL error of the exact rolling distinct, repartition-stable") {
-    // q240's scale swap: per-day sketch fan-out vs the 30x fact explode.
-    val du = graft.core.Tables.events(spark, sf("sf0.01"))
-      .select(col("user_id"), expr("unix_timestamp(ts) div 86400").as("day"))
-      .distinct()
-      .cache()
-    val exact = du
-      .select(col("user_id"), explode(sequence(col("day"), col("day") + 6L)).as("w_day"))
-      .distinct()
-      .groupBy(col("w_day")).agg(countDistinct(col("user_id")).as("n"))
-      .as[(Long, Long)].collect().toMap
-    val approx = Sketches.rollingDistinctHll(du, "day", "user_id", windowSize = 7)
-      .select(col("day"), col("approx_distinct").cast("long"))
-      .as[(Long, Long)].collect().toMap
-    assert(approx.keySet == exact.keySet, "every covered window day present")
-    exact.foreach { case (d, n) =>
-      assert(math.abs(approx(d) - n).toDouble / n < 0.05,
-        s"day $d: approx ${approx(d)} vs exact $n")
-    }
-    // register state is a pure function of the value set
-    val approx17 = Sketches
-      .rollingDistinctHll(du.repartition(17), "day", "user_id", windowSize = 7)
-      .select(col("day"), col("approx_distinct").cast("long"))
-      .as[(Long, Long)].collect().toMap
-    assert(approx17 == approx)
-    du.unpersist()
-  }
-
   test("CMS: never undercounts any item, bounded overcount, partitioning-invariant") {
     // zipf-ish multiset: item i appears ~200/i times
     val items = (1 to 40).flatMap(i => Seq.fill(200 / i)(i.toLong))

@@ -79,6 +79,11 @@ class StatsSpec extends SparkSpec {
       Seq("grp"), "k", "med", shift = 2)
       .as[(String, Long, Long)].collect().toSet
     assert(sib == Set(("g", 4L, 1L), ("h", 3L, 20L)))
+    // empty partCols: one global median
+    val global = Stats.medianHotBucket(
+      Seq(5L, 1L, 9L, 3L, 7L).toDF("x"), Seq.empty, "x", "med", shift = 2)
+      .as[(Long, Long)].collect().toSeq
+    assert(global == Seq((5L, 5L)))
   }
 
   test("ranksHotBucket: ppm thresholds on a DOUBLE domain match the sort definition") {
